@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -150,34 +151,50 @@ object GraftFunctions {
   val jaccardBuilder: Seq[Expression] => Expression =
     binary("graft_jaccard", JaccardSimilarity.apply)
 
-  /** graft_topk(col, k): k must be a foldable INT literal — it sizes the
-    * aggregation buffer, so a per-row k is meaningless. The analyzer
-    * wraps the returned AggregateFunction in an AggregateExpression. */
+  /** graft_topk(col, k): the k LARGEST non-null values of the group as a
+    * descending array. A SQL alias for Spark's own `CollectTopK`, which
+    * Spark ships but does not name in SQL: a bounded k-heap carried
+    * through two-phase aggregation, so map tasks ship ≤k values per
+    * group into the shuffle whatever the group size. Row-shaped top-k
+    * (keep the whole row) is plans/TopKPerGroup instead.
+    *
+    * k must be a foldable positive INT literal — it sizes the
+    * aggregation buffer, so a per-row k is meaningless, and CollectTopK
+    * only `assert`s k > 0, so a bad k is rejected here at analysis. The
+    * analyzer wraps the returned AggregateFunction in an
+    * AggregateExpression. */
   val topkBuilder: Seq[Expression] => Expression =
     binary("graft_topk", (child, kExpr) => {
       // arity here is CORRECT (two args) — a bad k is a data-type
       // problem, so the structured error is DATATYPE_MISMATCH (callers
       // matching on error class see the truthful category), not a
       // repurposed WRONG_NUM_ARGS with prose stuffed into its counts
+      val sqlExpr = s"\"graft_topk(${child.sql}, ${kExpr.sql})\""
       val k = kExpr match {
         case e if e.foldable && e.dataType == org.apache.spark.sql.types.IntegerType =>
           e.eval() match {
             case i: Integer => i.intValue()
             case _ => throw new org.apache.spark.sql.AnalysisException(
               errorClass = "DATATYPE_MISMATCH.UNEXPECTED_NULL",
-              messageParameters = Map(
-                "sqlExpr" -> s"\"graft_topk(${child.sql}, ${kExpr.sql})\"",
-                "exprName" -> "`k`"))
+              messageParameters = Map("sqlExpr" -> sqlExpr, "exprName" -> "`k`"))
           }
         case other => throw new org.apache.spark.sql.AnalysisException(
           errorClass = "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
           messageParameters = Map(
-            "sqlExpr" -> s"\"graft_topk(${child.sql}, ${kExpr.sql})\"",
+            "sqlExpr" -> sqlExpr,
             "inputName" -> "`k`",
             "inputType" -> "\"INT\"",
             "inputExpr" -> s"\"${other.sql}\""))
       }
-      TopKLargest(child, k)
+      if (k <= 0)
+        throw new org.apache.spark.sql.AnalysisException(
+          errorClass = "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE",
+          messageParameters = Map(
+            "sqlExpr" -> sqlExpr,
+            "exprName" -> "`k`",
+            "valueRange" -> s"[1, ${Int.MaxValue}]",
+            "currentValue" -> k.toString))
+      new CollectTopK(child, k)
     })
 
   /** SINGLE source of truth for the engine's SQL function surface —
@@ -191,7 +208,7 @@ object GraftFunctions {
     ("graft_dot", classOf[DotProduct], dotBuilder),
     ("graft_md5_60", classOf[Md5Long60], md5Long60Builder),
     ("graft_jaccard", classOf[JaccardSimilarity], jaccardBuilder),
-    ("graft_topk", classOf[TopKLargest], topkBuilder))
+    ("graft_topk", classOf[CollectTopK], topkBuilder))
 
   def register(spark: SparkSession): Unit =
     all.foreach { case (name, _, builder) =>

@@ -543,7 +543,7 @@ object TextOps {
       // cost model picks the partition count from the WORK instead:
       // the pair relation is pinned (one cheap barrier; pair count
       // rides the checkpoint via observe, free) and spread over
-      // work / ~8M merge-steps (≈50-100 ms of CPU per task), capped at
+      // work / stepsPerTask (3M merge-steps per task), capped at
       // defaultParallelism. Small candidate sets compute p = 1 and pay
       // only the pin; opt-in (spreadVerify) so row-trivial callers
       // don't pay even that.
@@ -558,9 +558,10 @@ object TextOps {
           val avgLen =
             if (dec.getLong(0) > 0L) dec.getLong(1) / dec.getLong(0) else 0L
           val work = nPairs * 2L * math.max(avgLen, 1L)
+          val stepsPerTask = 3000000L
           val p = math.max(1L, math.min(
             spark.sparkContext.defaultParallelism.toLong,
-            work / 3000000L)).toInt
+            work / stepsPerTask)).toInt
           if (p > 1) pinned.repartition(p) else pinned
         }
       candSrc.as[(Long, Long)].mapPartitions { it =>

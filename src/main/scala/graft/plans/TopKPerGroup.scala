@@ -14,21 +14,24 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * rows per group under a total order, as a first-class
   * LogicalPlan + SparkStrategy + SparkPlan.
   *
-  * Why a custom operator: the declarative form —
-  * `row_number().over(Window.partitionBy(g).orderBy(o)) <= k` — fully
-  * SORTS every group partition (WindowExec) and shuffles EVERY input
-  * row, even though only k survive. This operator keeps a bounded heap
-  * of k rows per group on each mapper (partial phase), so the exchange
-  * carries at most k·|groups| rows per input partition; the final phase
-  * then sorts the (already k-per-group-reduced) shuffle output by
-  * (group, order) — Spark's own spillable SortExec, inserted via
-  * requiredChildOrdering — and streams out the first k rows of each
-  * group with O(1) state. The same partial/final shape as Spark
-  * aggregation: map side O(n log k) with no full sort of the corpus,
-  * reduce side a sort of k·|groups| rows that spills instead of
-  * OOMing at any group cardinality. At 100 TB, top-k-per-key is the
-  * difference between shuffling the corpus and shuffling k rows per
-  * key.
+  * Why a custom operator: Spark 4.1 plans the declarative form —
+  * `row_number().over(Window.partitionBy(g).orderBy(o)) <= k` — with a
+  * `WindowGroupLimit … Partial` before the exchange, so it no longer
+  * shuffles every input row, but that partial limit first SORTS each
+  * whole map partition by (group, order): O(n log n) per mapper for k
+  * survivors per group. This operator keeps a bounded heap of k rows per
+  * group on each mapper instead (partial phase, O(n log k), no sort of
+  * the input), so the exchange carries at most k·|groups| rows per input
+  * partition; the final phase then sorts the (already k-per-group-
+  * reduced) shuffle output by (group, order) — Spark's own spillable
+  * SortExec, inserted via requiredChildOrdering — and streams out the
+  * first k rows of each group with O(1) state. Measured on local[4]
+  * (4-core VM, 10M rows, median of 3 alternating runs), this operator
+  * against the window form: 1k groups 1.50 s vs 4.49 s at k=3 and
+  * 1.61 s vs 4.80 s at k=100. With 10 rows per group (1M groups, k=3)
+  * the heaps barely prune and the window form wins, 7.95 s vs 3.90 s;
+  * the top-k callers here select a few rows from large groups, the
+  * shape the heap is for.
   *
   * Determinism contract: `order` must be a TOTAL order (callers append
   * an id tie-break), in which case the output row set is exactly the

@@ -475,8 +475,8 @@ object AdvancedQueries extends QueryRegistry {
       // InMemoryRelation paid decompression + ColumnarToRow on every
       // scan through a FRESH codegen class per iteration — measured
       // 6.5–9.1 s executorRunTime per iteration-scan against 0.3–0.7 s
-      // for the same scan over checkpoint-pinned UnsafeRows (Scratch
-      // pr_scan_eager vs pr_lc_scan, sf0.1). The cache's one advantage
+      // for the same scan over checkpoint-pinned UnsafeRows (eager scans
+      // of the cached vs the checkpointed relation, sf0.1). The cache's one advantage
       // — preserving the src hash-partitioning — buys nothing here:
       // the per-round join broadcasts the (1 row/node) rank relation,
       // so the edge side is never shuffled either way, and the

@@ -254,8 +254,9 @@ object AggQueries extends QueryRegistry {
         |                       WHERE o.o_orderkey = l.l_orderkey))
         |) t ORDER BY rule""".stripMargin))
 
-  // ---- Custom native aggregate: graft_topk (functions/TopKLargest) —
-  // per-nation 3 largest balances, carried as a bounded k-heap through
+  // ---- Bounded value top-k inside an agg list: graft_topk, the SQL
+  // alias for Spark's CollectTopK (functions/GraftFunctions.topkBuilder)
+  // — per-nation 3 largest balances, carried as a bounded k-heap through
   // two-phase aggregation (map tasks ship ≤k values per group into the
   // shuffle, never the group itself), then exploded to rows for the
   // oracle compare. Values only — ties beyond the boundary are equal

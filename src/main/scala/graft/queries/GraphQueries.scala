@@ -55,8 +55,8 @@ object GraphQueries extends QueryRegistry {
     // a columnar cache pays decompression + ColumnarToRow through a
     // fresh codegen class on EVERY round's re-scan (measured ~10× the
     // per-scan executor time of checkpoint-pinned UnsafeRows on the
-    // identical relation in q_pagerank, Scratch pr_scan_eager vs
-    // pr_lc_scan). The explode emits both edge directions in one pass
+    // identical relation in q_pagerank, eager scan of a cached vs a
+    // checkpointed edge relation). The explode emits both edge directions in one pass
     // over `e`, where the union-of-two-selects formulation scanned the
     // co-purchase self-join subtree twice.
     val edges = e.select(explode(array(

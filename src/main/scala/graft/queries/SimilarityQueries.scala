@@ -163,26 +163,28 @@ object SimilarityQueries extends QueryRegistry {
         |  FROM scored) t
         |WHERE rnk = 1 ORDER BY l1""".stripMargin))
 
-  // ---- Same top-k via the typed bounded-heap Aggregator (ops.TopKByScore):
-  // partial aggregation keeps k rows per group map-side instead of
-  // sorting every candidate in a window — the shuffle carries k·queries
-  // rows. Identical ordering contract → same oracle as sim_cosine_topk.
+  // ---- Same top-k through the engine's bounded-heap TopKPerGroup
+  // operator (plans/TopKPerGroup): each map task keeps at most k rows
+  // per query before the exchange, so the shuffle carries ≤ k·queries
+  // rows per partition instead of every scored candidate, and the rank
+  // window only sorts those k rows per query. Same total order (cosine
+  // DESC with NaN first, neighbor_id tie-break) → same oracle as
+  // sim_cosine_topk.
   private val bruteAgg = NamedQuery(
     "sim_cosine_topk_agg",
     (spark, d) => {
       val v = vecs(spark, d)
       val q = v.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
-      val topk = graft.ops.TopKByScore.udafFor(topK)
-      q.crossJoin(v)
+      val order = Seq(desc("cosine"), col("neighbor_id"))
+      val scored = q.crossJoin(v)
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           SimilarityOps.cosineNative6(spark, col("qemb"), col("embedding")).as("cosine"))
-        .groupBy("query_id")
-        .agg(topk(col("neighbor_id"), col("cosine")).as("top"))
-        .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-        .select(col("query_id"), (col("pos") + 1).cast("int").as("rnk"),
-          col("s.neighbor_id").as("neighbor_id"), col("s.cosine").as("cosine"))
+      val w = Window.partitionBy(col("query_id")).orderBy(order: _*)
+      graft.plans.TopK.perGroup(scored, Seq("query_id"), order, topK)
+        .withColumn("rnk", row_number().over(w))
+        .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cosine"))
         .orderBy("query_id", "rnk")
     },
     brute.oracle)

@@ -161,22 +161,6 @@ class FunctionsSpec extends SparkSpec {
     assert(ok === 1.0)
   }
 
-  test("TopKByScore ranks a NaN cosine first, matching Spark SQL desc() semantics") {
-    import graft.ops.{ScoredNeighbor, TopKByScore}
-    import spark.implicits._
-    val rows = Seq(
-      ScoredNeighbor(1L, 0.9), ScoredNeighbor(2L, Double.NaN),
-      ScoredNeighbor(3L, 0.95), ScoredNeighbor(4L, 0.1))
-    val agg = rows.toDS().select(TopKByScore.udafFor(2)(col("neighbor_id"), col("cosine")))
-      .as[Seq[ScoredNeighbor]].collect().head
-    // Spark SQL total order: NaN > every double → NaN first under DESC
-    assert(agg.map(_.neighbor_id) === Seq(2L, 3L))
-    // cross-check against the windowed/desc form the aggregator claims to match
-    val windowed = rows.toDF().orderBy(desc("cosine"), col("neighbor_id"))
-      .limit(2).collect().map(_.getLong(0)).toSeq
-    assert(windowed === agg.map(_.neighbor_id))
-  }
-
   test("participates in whole-stage codegen (no CodegenFallback)") {
     val df = v.as("a").join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(SimilarityOps.cosineNative6(spark,
@@ -203,7 +187,7 @@ class FunctionsSpec extends SparkSpec {
     assert(jgen.contains(".getLong(") && !jgen.contains("CodegenFallback"))
   }
 
-  // ---- graft_topk: custom TypedImperativeAggregate ----
+  // ---- graft_topk: SQL alias for Spark's CollectTopK ----
 
   test("graft_topk equals sort-desc-take under forced partial merges") {
     GraftFunctions.register(spark)
@@ -251,6 +235,17 @@ class FunctionsSpec extends SparkSpec {
     assert(e.getCondition == "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT", e.getCondition)
   }
 
+  test("graft_topk rejects k <= 0 at analysis, not with an executor assert") {
+    GraftFunctions.register(spark)
+    spark.range(5).createOrReplaceTempView("fs_topk_k")
+    for (k <- Seq(0, -3)) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT graft_topk(id, $k) FROM fs_topk_k")
+      }
+      assert(e.getCondition == "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", e.getCondition)
+    }
+  }
+
   test("graft_topk retains owned copies of strings from a columnar parquet scan") {
     // parquet's vectorized reader hands out UTF8Strings backed by
     // batch-reused buffers; a heap that retains them uncopied returns
@@ -273,9 +268,9 @@ class FunctionsSpec extends SparkSpec {
       """SELECT c_nationkey, graft_topk(c_acctbal, 3) AS top3,
         |  count(*) AS n FROM fs_cust GROUP BY c_nationkey""".stripMargin)
     // partial aggregation: plan carries two HashAggregate/ObjectHashAggregate
-    // phases (partial_graft_topk before the exchange)
+    // phases (partial_collect_top_k before the exchange)
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("partial_graft_topk"), s"no map-side partial in:\n$plan")
+    assert(plan.contains("partial_collect_top_k"), s"no map-side partial in:\n$plan")
     assert(df.count() === c.select("c_nationkey").distinct().count())
   }
 }

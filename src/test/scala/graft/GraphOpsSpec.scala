@@ -80,16 +80,31 @@ class GraphOpsSpec extends SparkSpec {
       "identical results when the rank/frontier side cannot broadcast") {
     // VERDICT r14 #2-wrong: with the threshold forced below any relation,
     // the size-aware hint cannot fire and the kernels switch to the
-    // src-partitioned cached edge pin. Results must be bit-identical.
+    // src-partitioned cached edge pin. Results must match (see below).
     // An isolated newSession keeps the shared session's conf untouched
     // (suites run concurrently on one session).
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
     val dir = "/root/testdata/sf0.001"
+    // The two plans sum each node's incoming rank in different orders,
+    // so a double may differ in its last bits and land one step of
+    // round(rank, 8) apart. Non-double columns (node ids, hop counts)
+    // must match exactly; doubles within 1e-8 (plus representation error).
+    def keyed(s: org.apache.spark.sql.SparkSession, q: String): Map[Seq[Any], Seq[Double]] = {
+      val rows = SparkEntry.queries(q)(s, dir).collect()
+      val byKey = rows.map { r =>
+        val (dbl, key) = r.toSeq.partition(_.isInstanceOf[Double])
+        key -> dbl.map(_.asInstanceOf[Double])
+      }.toMap
+      assert(byKey.size === rows.length, s"$q: non-double columns do not key the rows")
+      byKey
+    }
     for (q <- Seq("q_pagerank", "q_bfs_hops")) {
-      val want = SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted
-      val got = SparkEntry.queries(q)(s2, dir).collect().map(_.toString).sorted
-      assert(got.toSeq === want.toSeq, s"$q diverges above the threshold")
+      val want = keyed(spark, q)
+      val got = keyed(s2, q)
+      assert(got.keySet === want.keySet, s"$q: node sets diverge above the threshold")
+      for ((k, w) <- want; (a, b) <- got(k).zip(w))
+        assert(math.abs(a - b) <= 1e-8 + 1e-15, s"$q diverges above the threshold at $k: $a vs $b")
     }
   }
 }

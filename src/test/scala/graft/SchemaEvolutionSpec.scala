@@ -54,4 +54,22 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(got.contains("doc_id") && got.contains("text"))
     assert(Set(2, 4).contains(got.size))
   }
+
+  test("Tables.load: a TIMESTAMP(NANOS) events schema cached by one session reads in another") {
+    // Tables caches schemas per path for the whole JVM, but the NANOS
+    // layout is only inferred under a per-session legacy conf: the second
+    // session gets the cached LONG schema without tripping the inference
+    // failure, so it must set the conf itself. Fixture:
+    // tools/make_nanos_events_fixture.py.
+    val dir = new java.io.File(
+      getClass.getResource("/graft/events_nanos/events.parquet").toURI).getParent
+    val want = Seq(0L -> 1704067200123456L, 1L -> 1704067260000000L, 2L -> -1L, 3L -> 0L)
+    for (_ <- 1 to 2) {
+      val s = spark.newSession()
+      val got = Tables.events(s, dir).select(col("event_id"), unix_micros(col("ts")))
+        .orderBy("event_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(got === want)
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    }
+  }
 }

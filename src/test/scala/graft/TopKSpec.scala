@@ -53,6 +53,20 @@ class TopKSpec extends SparkSpec {
       Set((1L, 0L, 5.0), (2L, 0L, 4.0), (3L, 1L, 9.0)))
   }
 
+  test("TopK.perGroup ranks a NaN score first, matching Spark SQL desc() semantics") {
+    // Spark SQL's total order puts NaN above every double, so under
+    // desc() a NaN score (a zero-norm embedding's cosine) ranks FIRST;
+    // the operator's generated ordering must agree with the window form
+    val rows = Seq((1L, 0L, 0.9), (2L, 0L, Double.NaN), (3L, 0L, 0.95), (4L, 0L, 0.1))
+    val df = rows.toDF("id", "g", "score").repartition(2)
+    for ((k, want) <- Seq(1 -> Set(2L), 2 -> Set(2L, 3L))) {
+      val got = TopK.perGroup(df, Seq("g"), Seq(desc("score"), col("id")), k)
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(got === want, s"k=$k")
+      assert(windowForm(df, k).map(_._1) === got, s"k=$k")
+    }
+  }
+
   test("plan shape: partial+final custom exec, exchange between, no WindowExec") {
     val df = TopK.perGroup(data(8), Seq("g"), Seq(desc("score"), col("id")), 3)
     df.collect()
