@@ -4,7 +4,8 @@ import java.awt.image.BufferedImage
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import scala.util.{Failure, Success, Try}
 
@@ -43,8 +44,9 @@ import scala.util.{Failure, Success, Try}
   * recursive listing AND the byte reads are distributed (the driver
   * issues exactly one shallow listStatus on the root — executors walk
   * the first-level subdirectories in parallel, so no O(corpus)
-  * driver-side stage remains); the only shuffle in the full pipeline is
-  * the tag aggregation in Tagging.concatTags. */
+  * driver-side stage remains); tagging runs in the same narrow map as
+  * scoring, so the only shuffle in the full pipeline is the source's
+  * hash partitioning of the listed paths, before the read. */
 object Images {
 
   /** appV2.py:17 — lower-cased extension allow-list. */
@@ -240,7 +242,7 @@ object Images {
             } match {
               case Success(b) => (uri, b, null: String)
               case Failure(e) =>
-                (uri, null: Array[Byte], "error: read failed: " +
+                (uri, null: Array[Byte], ReadFailed +
                   Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
             }
           }
@@ -1350,6 +1352,20 @@ object Images {
   def scoreImages(images: DataFrame, scorer: Scorer, targetSize: Int = 448): DataFrame = {
     val spark = images.sparkSession
     import spark.implicits._
+    mapScored(images, scorer, targetSize)((path, logits, status) => (path, logits, status))
+      .toDF("path", "logits", "status")
+  }
+
+  /** The one scoring map: every (path, content, read_error) row goes
+    * through decode → preprocess → score, then `emit` turns (path,
+    * logits, status) into the output row — logits is null exactly when
+    * status is not "ok". One scorer per partition — mirror of the
+    * one-session-per-run amortization in the reference (appV2.py:149). */
+  private def mapScored[T: org.apache.spark.sql.Encoder](
+      images: DataFrame, scorer: Scorer, targetSize: Int)(
+      emit: (String, Array[Float], String) => T): org.apache.spark.sql.Dataset[T] = {
+    val spark = images.sparkSession
+    import spark.implicits._
     // sources without the read-error channel (hand-built frames in
     // tests, older connectors) still score — the column is optional
     val withErr =
@@ -1358,134 +1374,81 @@ object Images {
     withErr.select(col("path"), col("content"), col("read_error"))
       .as[(String, Array[Byte], String)]
       .mapPartitions { iter =>
-        // one scorer per partition — mirror of the one-session-per-run
-        // amortization in the reference (appV2.py:149)
         val s = scorer
         iter.map {
           // a failed READ rides the same per-row channel as a failed
           // decode (appV2.py:165-185): status row, null logits, job lives
-          case (path, _, readErr) if readErr != null =>
-            (path, null.asInstanceOf[Array[Float]], readErr)
-          case (path, null, _) =>
-            (path, null.asInstanceOf[Array[Float]], "error: null content")
+          case (path, _, readErr) if readErr != null => emit(path, null, readErr)
+          case (path, null, _) => emit(path, null, NullContent)
           case (path, bytes, _) =>
             Try(s.score(preprocess(bytes, targetSize))) match {
-              case Success(logits) => (path, logits, "ok")
-              case Failure(e) =>
-                (path, null.asInstanceOf[Array[Float]],
-                  s"error: ${Option(e.getMessage).getOrElse(e.getClass.getSimpleName)}")
+              case Success(logits) => emit(path, logits, "ok")
+              case Failure(e) => emit(path, null,
+                s"error: ${Option(e.getMessage).getOrElse(e.getClass.getSimpleName)}")
             }
         }
       }
-      .toDF("path", "logits", "status")
   }
 
-  // one persisted scored relation per session (see tagImages): replaced
-  // — and the predecessor unpersisted — on every call; released
-  // explicitly via releaseScored when the caller's terminal action is
-  // done. Every mutation purges entries whose session has STOPPED (their
-  // cache died with the context), so the map is bounded by |live
-  // sessions that ever called tagImages| even in a JVM that cycles
-  // through many short-lived sessions. All mutations hold the map's
-  // monitor: two concurrent tagImages calls on one session must not
-  // interleave release/persist/put and strand (or steal) a cache entry.
-  private val lastScored =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
+  /** Kept for callers written against the cached form of [[tagImages]]:
+    * tagImages now persists nothing, so there is nothing to release. */
+  def releaseScored(spark: SparkSession): Unit = ()
 
-  private def purgeStoppedLocked(): Unit = {
-    val it = lastScored.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-  }
-
-  /** Release the cached scored relation owned by [[tagImages]] for this
-    * session. Call after the terminal action on the returned frame. */
-  def releaseScored(spark: SparkSession): Unit = lastScored.synchronized {
-    purgeStoppedLocked()
-    Option(lastScored.remove(spark))
-      .foreach(df => if (!spark.sparkContext.isStopped) df.unpersist(false))
-  }
-
-  /** Full flagship chain EP2 (appV2.py:167-179): source → score → tag.
-    * Failed rows keep their error status with a null tag string.
+  /** Full flagship chain EP2 (appV2.py:167-179) as ONE narrow map:
+    * read → decode → score → tags → (path, status, tags), the reference's
+    * per-image loop iteration (appV2.py:165-185). The vocab is collected
+    * once on the driver and compiled into a [[Tagging.SelectionProgram]]
+    * in REFERENCE mode; nothing is persisted, joined or shuffled after
+    * the read.
     *
-    * Cache lifecycle: the returned frame depends on ONE persisted
-    * relation owned by this object — released automatically when the
-    * next tagImages call on the same session replaces it, or explicitly
-    * via [[releaseScored]]. */
+    * Failed rows keep their error status with a null tag string. A vocab
+    * index at or past the scores' length (or below −length) fails every
+    * scored row with numpy's IndexError text (appV2.py:79,92 — the
+    * per-image try catches it), while decode failures keep their own,
+    * earlier, message; a valid negative index wraps per row. */
   def tagImages(spark: SparkSession, dir: String, vocab: DataFrame, scorer: Scorer,
                 recursive: Boolean = false,
                 genThreshold: Double = 0.55, charThreshold: Double = 0.60): DataFrame = {
-    // persist the logits relation: the plan below references it THREE
-    // times (the ok-filter feeding the tag pipeline — itself read twice
-    // inside Tagging.pipeline — and the final status join), and without
-    // a persist each subtree re-runs the binaryFile scan + decode +
-    // score, tripling the single most expensive stage of the flagship.
-    // The cached relation is (path, 4·nTags B logits, status) — orders
-    // of magnitude smaller than the decode work it saves; it stays
-    // cached until the NEXT tagImages call on the same session (the
-    // handle below) or an explicit releaseScored — so a long-lived
-    // session holds at most ONE scored relation, never an unbounded
-    // LRU-pressure accumulation across repeated invocations.
-    // release BEFORE persisting the replacement: CacheManager dedupes by
-    // canonicalized plan, so a repeat call over the same directory would
-    // otherwise no-op its persist and then unpersist the shared entry —
-    // leaving the new frame uncached. One monitor around the whole
-    // release→persist→put so concurrent callers can't strand an entry.
-    val scored = lastScored.synchronized {
-      releaseScored(spark)
-      val s = scoreImages(source(spark, dir, recursive), scorer)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      lastScored.put(spark, s)
-      s
-    }
-    // appV2 parity (appV2.py:79,92): a vocab index at or past the
-    // model's output dimension raises numpy IndexError inside the
-    // per-image try — EVERY image fails, none is tagged. The condition
-    // is row-independent (vocab × scorer dimension, both known here),
-    // so it is checked once against the driver-sized vocab dimension;
-    // ok rows then carry the reference's per-image error instead of a
-    // silent skip of the overrun entries. Decode-failed rows keep
-    // their own (earlier) error.
-    val entries = vocab.select("tag_idx", "tag_name", "category", "emit_pos")
-      .collect()
-      .map(r => Vocab.Entry(r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3)))
-      .toSeq
-    Tagging.overrunError(entries, scorer.nTags) match {
-      case Some(msg) =>
-        scored.select(col("path"),
-          when(col("status") === "ok", lit("error: " + msg))
-            .otherwise(col("status")).as("status"),
-          lit(null).cast("string").as("tags"))
-      case None =>
-        // python wrap parity: a VALID negative index reads from the end
-        // (numpy probs[-1] = last logit; int("-1") parses as a JSON key)
-        // — the relational join needs the wrapped value, and the scorer
-        // dimension known here makes the wrap a driver-side remap
-        val fitted = vocab.withColumn("tag_idx",
-          when(col("tag_idx") < 0, col("tag_idx") + scorer.nTags)
-            .otherwise(col("tag_idx")))
-        val ok = scored.filter(col("status") === "ok")
-          .select(col("path").as("image_id"), col("logits"))
-        val tags = Tagging.pipeline(ok, fitted, genThreshold, charThreshold)
-        scored.select(col("path"), col("status"))
-          .join(tags.withColumnRenamed("image_id", "path"), Seq("path"), "left")
-          .select(col("path"), col("status"), col("tags"))
-    }
+    import spark.implicits._
+    val entries = Tagging.collectEntries(vocab)
+    val program = Tagging.SelectionProgram(entries, genThreshold, charThreshold)
+    mapScored(source(spark, dir, recursive), scorer, targetSize = 448) { (path, logits, status) =>
+      if (logits == null) (path, status, null: String)
+      else program.tags(UnsafeArrayData.fromPrimitiveArray(logits), floats = true) match {
+        // the only way a scorer's (null-free) vector fails the program
+        case null => (path, "error: " + Tagging.overrunError(entries, logits.length).get, null)
+        case tags => (path, status, tags)
+      }
+    }.toDF("path", "status", "tags")
   }
+
+  /** Status texts the error classes of [[withRunMetrics]] key on. */
+  private val ReadFailed = "error: read failed: "
+  private val NullContent = "error: null content"
 
   /** R17 run metrics (appV2.py:162-163,186-190): success/failed counters
     * attached via df.observe — computed DURING the same action that
     * processes the images, no second pass. Read `obs.get` after any
-    * action on the returned frame. */
+    * action on the returned frame. Failures are also counted by class,
+    * from the status text: `n_read_failed` (the source could not read
+    * the bytes), `n_overrun_failed` (the vocab overruns the scores,
+    * numpy's IndexError) and `n_decode_failed` (every other failure —
+    * decode, preprocess or scorer). */
   def withRunMetrics(tagged: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation("tagger_run_metrics")
+    val status = col("status")
+    val isRead = status.startsWith(ReadFailed) || status === NullContent
+    val isOverrun = status.rlike("^error: index -?[0-9]+ is out of bounds for axis 0 with size [0-9]+$")
+    // coalesce: sum() over an EMPTY directory is null, and the
+    // end-of-run report would print "success: null" instead of 0
+    def countOf(p: Column) = coalesce(sum(when(p, 1L).otherwise(0L)), lit(0L))
     val observed = tagged.observe(obs,
       count(lit(1)).as("n_total"),
-      // coalesce: sum() over an EMPTY directory is null, and the
-      // end-of-run report would print "success: null" instead of 0
-      coalesce(sum(when(col("status") === "ok", 1L).otherwise(0L)), lit(0L)).as("n_ok"),
-      coalesce(sum(when(col("status") =!= "ok", 1L).otherwise(0L)), lit(0L)).as("n_failed"))
+      countOf(status === "ok").as("n_ok"),
+      countOf(status =!= "ok").as("n_failed"),
+      countOf(isRead).as("n_read_failed"),
+      countOf(isOverrun).as("n_overrun_failed"),
+      countOf(status =!= "ok" && !isRead && !isOverrun).as("n_decode_failed"))
     (observed, obs)
   }
 

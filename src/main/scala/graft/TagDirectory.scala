@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * ONNX Runtime Scorer drops in via Images.Scorer without touching this
   * file's flow). Prints the reference's end-of-run metrics (success /
   * failed / total sec, appV2.py:186-190), computed via observe() during
-  * the single pass. */
+  * the single pass, with the failures split by error class. Runs on
+  * `local[SPARK_GRAFT_CPUS]`, all available cores when unset. */
 object TagDirectory {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) {
@@ -32,7 +33,8 @@ object TagDirectory {
     val genT = opt("--gen").map(_.toDouble).getOrElse(0.55)
     val charT = opt("--char").map(_.toDouble).getOrElse(0.60)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-tag-directory")
@@ -70,14 +72,15 @@ object TagDirectory {
       Images.FixtureScorer(nTags), recursive, genT, charT)
     val (observed, metrics) = Images.withRunMetrics(tagged)
     Images.writeSidecars(observed.filter(col("status") === "ok"))
-    Images.releaseScored(spark) // terminal action done — drop the cache
     val sec = (System.nanoTime() - t0) / 1e9
     val m = metrics.get
     val n = m("n_total").asInstanceOf[Long]
     // end-of-run report, mirror of appV2.py:186-190
     println(f"=== done ===")
     println(f"total: $sec%.2f s (${if (n > 0) sec / n else 0.0}%.3f s/image)")
-    println(s"success: ${m("n_ok")}, failed: ${m("n_failed")}")
+    println(s"success: ${m("n_ok")}, failed: ${m("n_failed")}" +
+      s" (read: ${m("n_read_failed")}, decode: ${m("n_decode_failed")}," +
+      s" vocab overrun: ${m("n_overrun_failed")})")
     spark.stop()
   }
 }

@@ -1,20 +1,27 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** The relational tagging core — the reference's `get_tags` + sigmoid
-  * (reference appV2.py:74-101,174) re-expressed as Spark built-ins.
+/** The tagging core — the reference's `get_tags` + sigmoid
+  * (reference appV2.py:74-101,174) as a compiled per-row program.
   *
-  * The central reframing (SURVEY.md §2): a score vector per item is a
-  * long-format relation scores(image_id, tag_idx, prob) joined to the
-  * vocabulary dimension; tag selection is
+  * Tag selection is a function of ONE row's score vector plus the
+  * vocabulary dimension (SURVEY.md §2):
   *   - per-category top-1 (unthresholded) for rating/quality (appV2.py:77-83)
   *   - per-category threshold filter for the other six (appV2.py:86-97)
   *   - a substring blacklist anti-filter on meta tags (appV2.py:98-99)
   *   - underscore→space projection (appV2.py:83,97)
-  *   - ordered group-concat, order = (category emission rank, JSON
-  *     insertion position) (appV2.py:62-68,77,86-89,93)
+  *   - ordered concat, order = (category emission rank, JSON insertion
+  *     position) (appV2.py:62-68,77,86-89,93)
   *
   * PRECISION (deliberate divergence, r9 review): probabilities compute
   * in f64; the reference's numpy chain stays in f32 (appV2.py:174 —
@@ -28,13 +35,14 @@ import org.apache.spark.sql.functions._
   * fixture logits near p≈0.98 collide in f32), forcing every tagger
   * oracle onto struct-ordered argmax — traded away for keeping the
   * strictly-more-precise math. The NaN and empty-name contracts ARE
-  * mirrored exactly (see clippedSigmoid / selectTags).
+  * mirrored exactly (see clippedSigmoid / SelectionProgram).
   *
-  * Everything here is Catalyst built-ins (whole-stage codegen'd, no UDFs):
-  * scale comes from one shuffle on image_id for the argmax aggregation and
-  * one for the final concat; the vocab join is an explicit broadcast (the
-  * dimension is tiny — mirror of the reference's in-memory index,
-  * appV2.py:70-71).
+  * Distribution: the vocabulary is collected to the driver once and
+  * compiled into a [[SelectionProgram]]; every row is then tagged inside
+  * one narrow projection over the scan — no explode, no shuffle, no join
+  * (the executor-side dual of the reference's in-memory loop,
+  * appV2.py:165-185). The relational long-format form lives on as the
+  * test-side differential reference and as the DuckDB oracle SQL.
   */
 object Tagging {
 
@@ -49,7 +57,11 @@ object Tagging {
     * poisons numpy's running maximum). Spark's least/greatest would
     * instead clip NaN to 30 (NaN sorts greatest), silently scoring a
     * broken logit as near-certain — the explicit isnan branch keeps the
-    * reference's semantics; selectTags excludes NaN from thresholds. */
+    * reference's semantics. A NULL logit does NOT propagate: least and
+    * greatest skip a null argument, so it scores σ(30); callers that
+    * may see null logits guard them (the relational test reference
+    * does). SigmoidThresholdRewrite matches this exact shape;
+    * SelectionProgram.sigmoid is its per-row twin. */
   def clippedSigmoid(x: Column): Column = {
     val xd = x.cast("double")
     val s = lit(1.0) /
@@ -57,116 +69,6 @@ object Tagging {
     when(isnan(xd), xd).otherwise(s)
   }
 
-  /** Vector → long format: (id, tag_idx LONG, logit DOUBLE). posexplode is
-    * the Spark dual of numpy fancy-indexing over the score vector
-    * (appV2.py:79,92). */
-  def explodeScores(scores: DataFrame, idCol: String = "image_id",
-                    vecCol: String = "logits"): DataFrame =
-    scores.select(
-      col(idCol).as("image_id"),
-      posexplode(col(vecCol)).as(Seq("tag_idx", "logit")))
-      .select(col("image_id"), col("tag_idx").cast("long").as("tag_idx"),
-        col("logit").cast("double").as("logit"))
-
-  /** Category → emission rank (appV2.py:77,86-89): rating, quality first
-    * (argmax loop order), then threshold_map insertion order. */
-  def catRank(category: Column): Column =
-    Vocab.emissionRank.foldLeft(lit(-1)) { case (acc, (cat, rank)) =>
-      when(category === cat, lit(rank)).otherwise(acc)
-    }
-
-  /** From long-format probs (image_id, tag_idx, prob) and the vocab
-    * dimension (must carry emit_pos — Vocab.toDF / syntheticVocab do),
-    * select tags per the reference contract. Returns
-    * (image_id, cat_rank INT, emit_pos LONG, tag_idx LONG, display STRING). */
-  def selectTags(probs: DataFrame, vocab: DataFrame,
-                 genThreshold: Double = 0.55, charThreshold: Double = 0.60): DataFrame = {
-    // Inner join reproduces both the dense-array hole skip and the
-    // None-name guard (appV2.py:82,96): a tag_idx with no vocab row
-    // selects nothing.
-    val joined = probs.join(broadcast(vocab), "tag_idx")
-
-    // Unthresholded per-category argmax for rating/quality (appV2.py:77-83).
-    // numpy argmax returns the FIRST max in the category index array,
-    // which is built in JSON-insertion order (appV2.py:62-68) → ties
-    // break to the lowest emit_pos, NOT the lowest tag_idx (they differ
-    // when the mapping's keys are not ascending); max_by over
-    // struct(prob, -emit_pos) encodes exactly that.
-    val argmax = joined
-      .filter(col("category").isin(Vocab.argmaxCategories: _*))
-      .groupBy("image_id", "category")
-      .agg(max_by(
-        struct(col("emit_pos"), col("tag_idx"), col("tag_name")),
-        struct(col("prob"), negate(col("emit_pos")))).as("best"))
-      .select(col("image_id"), col("category"),
-        col("best.emit_pos").as("emit_pos"),
-        col("best.tag_idx").as("tag_idx"), col("best.tag_name").as("tag_name"))
-
-    // Category-dependent threshold filter (appV2.py:86-97); >= not >.
-    // !isnan: numpy's `NaN >= θ` is False (tag NOT emitted), but Spark
-    // orders NaN greatest so its `>=` would be TRUE — without the guard
-    // a NaN prob would emit through every threshold lane.
-    val thresholded = joined
-      .filter(!isnan(col("prob")) &&
-        ((col("category").isin(Vocab.genThresholdCategories: _*) &&
-          col("prob") >= lit(genThreshold)) ||
-        (col("category").isin(Vocab.charThresholdCategories: _*) &&
-          col("prob") >= lit(charThreshold))))
-      .select("image_id", "category", "emit_pos", "tag_idx", "tag_name")
-
-    val display = regexp_replace(col("tag_name"), "_", " ")
-    // Substring (not word) blacklist on meta tags, checked on the
-    // lower-cased underscore-replaced name (appV2.py:97-98 — replace
-    // happens BEFORE the check).
-    val blacklisted = Vocab.metaBlacklist
-      .map(s => lower(display).contains(s))
-      .reduce(_ || _)
-
-    argmax.unionByName(thresholded)
-      // the reference's `names[global_idx]` TRUTHINESS guard
-      // (appV2.py:82,96): an empty-string tag name is selected but never
-      // EMITTED — for argmax lanes the empty-named winner still blocks
-      // the runner-up (no fallback), which is why this filter sits AFTER
-      // the argmax, not in the vocab
-      .filter(col("tag_name").isNotNull && col("tag_name") =!= "")
-      .filter(!(col("category") === "meta" && blacklisted))
-      .select(col("image_id"), catRank(col("category")).as("cat_rank"),
-        col("emit_pos"), col("tag_idx"), display.as("display"))
-  }
-
-  /** Ordered group-concat (appV2.py:101): ", ".join in (cat_rank,
-    * emit_pos) order — the reference emits threshold tags in category-
-    * index (JSON insertion) order. `ids` must hold one row per input item
-    * (column image_id) so items with zero selected tags still emit an
-    * empty string, like the reference writing an empty .txt. */
-  def concatTags(ids: DataFrame, selected: DataFrame): DataFrame = {
-    val agg = selected
-      .groupBy("image_id")
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(col("cat_rank"), col("emit_pos"), col("display")))),
-          x => x.getField("display")),
-        ", ").as("tags"))
-    ids.select(col("image_id")).join(agg, Seq("image_id"), "left")
-      .withColumn("tags", coalesce(col("tags"), lit("")))
-  }
-
-  /** Full pipeline: scores(id, logits ARRAY) × vocab → (image_id, tags). */
-  def pipeline(scores: DataFrame, vocab: DataFrame,
-               genThreshold: Double = 0.55, charThreshold: Double = 0.60,
-               idCol: String = "image_id", vecCol: String = "logits"): DataFrame = {
-    val probs = explodeScores(scores, idCol, vecCol)
-      .withColumn("prob", clippedSigmoid(col("logit")))
-    val selected = selectTags(probs, vocab, genThreshold, charThreshold)
-    concatTags(scores.select(col(idCol).as("image_id")), selected)
-  }
-
-  /** A compiled, serializable form of the whole tag-selection program:
-    * per-lane primitive index arrays in emission order, displays
-    * pre-normalized, the meta blacklist applied at BUILD time (it depends
-    * only on the tag name, appV2.py:98). One instance is closed over by
-    * pipelineLocal's partition function — the executor-side equivalent of
-    * the reference's precomputed category index (appV2.py:62-71). */
   /** appV2 parity for a vocabulary that OVERRUNS the model's output
     * dimension (appV2.py:79,92 — `probs[categories[cat]]`): numpy fancy
     * indexing raises IndexError inside the per-image try/except, so
@@ -189,22 +91,40 @@ object Tagging {
       // tags normally.
       .filter(e => Vocab.emissionRank.contains(e.category))
       // python-faithful bounds: negative indices WRAP (int("-1") parses,
-      // numpy probs[-1] is the last logit — see the wrap remap in
-      // tagImages / SelectionProgram.tags); only idx ≥ n or idx < −n
-      // raises
+      // numpy probs[-1] is the last logit — see SelectionProgram.tags);
+      // only idx ≥ n or idx < −n raises
       .filter(e => e.tagIdx >= nOutputs || e.tagIdx < -nOutputs.toLong)
       .sortBy(e => (Vocab.emissionRank(e.category), e.emitPos))
       .headOption
       .map(e => s"index ${e.tagIdx} is out of bounds for axis 0 with size $nOutputs")
 
+  /** A compiled, serializable form of the whole tag-selection program:
+    * per-lane primitive index arrays in emission order, displays
+    * pre-normalized, the meta blacklist applied at BUILD time (it depends
+    * only on the tag name, appV2.py:98) — the executor-side equivalent
+    * of the reference's precomputed category index (appV2.py:62-71).
+    *
+    * Two modes differ only at the edges of a row's score vector:
+    *   - REFERENCE mode (`joinMode = false`; tagImages, pipelineLocal) is
+    *     numpy's `probs[categories[cat]]`: a negative index wraps
+    *     (probs[-1] = last logit), an index at or past the vector's end
+    *     or below −len raises IndexError, and so does a null element or
+    *     a null vector (σ over an object array holding None raises
+    *     TypeError) — the row fails with null tags, never the job.
+    *   - JOIN mode (`joinMode = true`; pipeline) is the relational
+    *     contract, where the vocab meets posexplode's positions through
+    *     an inner join: an index outside [0, len) selects nothing, a
+    *     null vector gives "", and a null element never passes a
+    *     threshold and loses the argmax to every non-null value (ties
+    *     between nulls go to the lowest emit_pos). */
   private[graft] final case class SelectionProgram(
       argmaxLanes: Array[(Array[Int], Array[String])],
       thresholdLanes: Array[(Array[Int], Array[String], Double)],
-      maxIdx: Int, minIdx: Int) extends Serializable {
+      maxIdx: Int, minIdx: Int, joinMode: Boolean) extends Serializable {
 
     // identical double math to Spark's exp builtin (java.lang.Math.exp
     // in codegen) → bit-identical probs and therefore identical
-    // comparisons vs the relational pipeline. NaN PROPAGATES, mirroring
+    // comparisons vs clippedSigmoid. NaN PROPAGATES, mirroring
     // clippedSigmoid's isnan branch and the reference (np.clip(NaN) is
     // NaN): a NaN prob wins argmax (numpy's poisoned running maximum ≡
     // Double.compare treating NaN greatest) but is excluded from every
@@ -216,16 +136,10 @@ object Tagging {
         1.0 / (1.0 + java.lang.Math.exp(-clipped))
       }
 
-    /** The reference's get_tags over one score vector (appV2.py:74-101).
-      * Returns NULL when any vocab index overruns the vector — the
-      * reference's numpy IndexError fails the whole image (see
-      * [[Tagging.overrunError]]); callers represent failure as a null
-      * tags value (the same convention tagImages' left join produces
-      * for decode-failed rows). NEGATIVE indices wrap like numpy
-      * (probs[-1] = last logit) down to −len, below which numpy raises
-      * too — before this contract, vec(-1) was an
-      * ArrayIndexOutOfBoundsException that killed the whole JOB on one
-      * malformed vocab row.
+    /** The reference's get_tags over one score vector (appV2.py:74-101);
+      * `floats` says whether `vec` holds FLOAT (else DOUBLE) elements.
+      * Returns null when the row fails (reference mode only, see the
+      * class doc and [[Tagging.overrunError]]).
       *
       * DELIBERATE DIVERGENCE (ADVICE r11, documented not replicated):
       * the PROBS wrap is faithful, but the reference's display-name
@@ -242,8 +156,22 @@ object Tagging {
       * per-image well-defined behavior over replicating load-order-
       * dependent slot aliasing; display output can differ from the
       * reference on vocabs with negative keys. */
-    def tags(vec: Array[Double]): String = {
-      if (maxIdx >= vec.length || minIdx < -vec.length) return null
+    def tags(vec: ArrayData, floats: Boolean): String = {
+      if (vec == null) return if (joinMode) "" else null
+      val n = vec.numElements()
+      if (!joinMode) {
+        if (maxIdx >= n || minIdx < -n) return null
+        var i = 0
+        while (i < n) { if (vec.isNullAt(i)) return null; i += 1 }
+      }
+      // the vector position of a lane entry, or −1 when it selects
+      // nothing: join mode dropped negative entries at build and skips
+      // those past the end; reference mode has already bounds-checked
+      // and wraps a negative index like numpy
+      @inline def position(raw: Int): Int =
+        if (raw < 0) raw + n else if (raw >= n) -1 else raw
+      @inline def logit(i: Int): Double =
+        if (floats) vec.getFloat(i).toDouble else vec.getDouble(i)
       val sb = new java.lang.StringBuilder(64)
       var lane = 0
       while (lane < argmaxLanes.length) {
@@ -253,13 +181,14 @@ object Tagging {
         var best = -1; var bestP = Double.NaN
         var i = 0
         while (i < idxs.length) {
-          val raw = idxs(i)
-          // numpy wrap: a negative index reads from the end; the
-          // out-of-bounds cases already returned null above
-          val idx = if (raw < 0) raw + vec.length else raw
-          val p = sigmoid(vec(idx))
-          // Double.compare ≡ Spark's max_by struct ordering (NaN-safe)
-          if (best < 0 || java.lang.Double.compare(p, bestP) > 0) { best = i; bestP = p }
+          val pos = position(idxs(i))
+          if (pos >= 0) {
+            // a null element (join mode) ranks below every σ value and
+            // NaN under Double.compare, and ties with other nulls
+            val p = if (vec.isNullAt(pos)) Double.NegativeInfinity else sigmoid(logit(pos))
+            // Double.compare ≡ Spark's max_by struct ordering (NaN-safe)
+            if (best < 0 || java.lang.Double.compare(p, bestP) > 0) { best = i; bestP = p }
+          }
           i += 1
         }
         // displays(best) == null marks an EMPTY-NAMED winner (the
@@ -276,11 +205,9 @@ object Tagging {
         val (idxs, displays, theta) = thresholdLanes(lane)
         var i = 0
         while (i < idxs.length) {
-          val raw = idxs(i)
-          val idx = if (raw < 0) raw + vec.length else raw // numpy wrap
-          val p = sigmoid(vec(idx))
+          val pos = position(idxs(i))
           // primitive >= is already numpy's semantics: NaN >= θ false
-          if (!p.isNaN && p >= theta) {
+          if (pos >= 0 && !vec.isNullAt(pos) && sigmoid(logit(pos)) >= theta) {
             if (sb.length > 0) sb.append(", ")
             sb.append(displays(i))
           }
@@ -294,9 +221,16 @@ object Tagging {
 
   private[graft] object SelectionProgram {
     def apply(vocabEntries: Seq[Vocab.Entry],
-              genThreshold: Double, charThreshold: Double): SelectionProgram = {
-      val boundEntries = vocabEntries.filter(e => Vocab.emissionRank.contains(e.category))
-      val byCat = vocabEntries.groupBy(_.category)
+              genThreshold: Double, charThreshold: Double,
+              joinMode: Boolean = false): SelectionProgram = {
+      // join mode: an index outside [0, Int.MaxValue] can never meet a
+      // posexplode position, so it is dropped here — never wrapped, and
+      // never narrowed through toInt into a valid-looking one
+      val usable =
+        if (joinMode) vocabEntries.filter(e => e.tagIdx >= 0 && e.tagIdx <= Int.MaxValue)
+        else vocabEntries
+      val boundEntries = usable.filter(e => Vocab.emissionRank.contains(e.category))
+      val byCat = usable.groupBy(_.category)
         .map { case (c, es) => c -> es.sortBy(_.emitPos) }
       def lane(cat: String, argmaxLane: Boolean): (Array[Int], Array[String]) = {
         val es = byCat.getOrElse(cat, Seq.empty)
@@ -309,7 +243,7 @@ object Tagging {
         // them outright (selection there is per-entry).
         val kept =
           if (cat == "meta")
-            es.filterNot(e => Vocab.metaBlacklist.exists(
+            es.filterNot(e => e.tagName != null && Vocab.metaBlacklist.exists(
               e.tagName.replace('_', ' ').toLowerCase.contains(_)))
           else es
         val emittable = kept.filter(e => e.tagName != null && e.tagName.nonEmpty)
@@ -333,84 +267,128 @@ object Tagging {
         // at LOAD in the reference (appV2.py:68), so its index never
         // enters a category array and can never trip the IndexError —
         // bounds-checking it here would null every image's tags where
-        // the reference (and this engine's relational path, whose inner
-        // join drops the entry) tags normally. Blacklisted and
-        // empty-named entries are KEPT: they do sit in the reference's
-        // category arrays and do raise.
+        // the reference tags normally. Blacklisted and empty-named
+        // entries are KEPT: they do sit in the reference's category
+        // arrays and do raise.
         // clamped, not truncated: a Long index past Int range must trip
         // the bounds pre-check, never wrap through toInt into the lanes
         if (boundEntries.isEmpty) -1
         else math.min(boundEntries.map(_.tagIdx).max, Int.MaxValue.toLong).toInt,
         if (boundEntries.isEmpty) 0
-        else math.max(boundEntries.map(_.tagIdx).min, Int.MinValue.toLong).toInt)
+        else math.max(boundEntries.map(_.tagIdx).min, Int.MinValue.toLong).toInt,
+        joinMode)
     }
   }
 
-  /** The SCALE path: the whole tag-selection program computed row-locally
-    * — zero shuffles, zero joins, one narrow map over the scan.
+  /** [[SelectionProgram.tags]] as a Catalyst expression over the score-
+    * vector column: the vector is read in place (no copy, no boxing) from
+    * a FLOAT or DOUBLE array, so the selection runs inside the scan's own
+    * whole-stage-codegen projection.
     *
-    * The relational `pipeline` above is the oracle-checkable reframing
-    * (SURVEY.md §2); at 100 TB its posexplode multiplies the row count by
-    * |vocab| and pushes tens of billions of rows through two shuffles and
-    * an items×items join. But the vocabulary is a broadcast-sized
-    * dimension and every selection rule (argmax, threshold, blacklist,
-    * emission order) is a function of ONE row's score vector plus that
-    * dimension, so the correct distribution strategy is per-row local
-    * evaluation — exactly how the reference's in-memory loop works
-    * (appV2.py:165-185), parallelized over partitions.
-    *
-    * Why mapPartitions and not Column expressions (SURVEY §7.4 ladder):
+    * Why an expression and not Column built-ins (SURVEY §7.4 ladder):
     * Spark's higher-order functions (transform/filter/aggregate lambdas)
     * do NOT participate in whole-stage codegen — an HOF formulation
     * evaluates ~|vocab| interpreted, boxing lambda calls per row (5×
     * SLOWER than the relational form, measured), and a flat when-chain
     * expression tree codegens only while |vocab| stays under the 64KB
-    * method limit (the real CL tagger vocabulary is ~12k tags). A
-    * partition function over primitive double[] is JIT-compiled straight
-    *-line math — the Dataset encoder's Array[Double] fast path avoids
-    * per-element boxing both ways.
+    * method limit (the real CL tagger vocabulary is ~12k tags). */
+  private[graft] final case class SelectTags(child: Expression, program: SelectionProgram)
+      extends UnaryExpression {
+    override def dataType: DataType = StringType
+    override def nullable: Boolean = !program.joinMode
+    override def prettyName: String = "graft_select_tags"
+    // plans print the vector column, not the compiled program's arrays
+    override protected def stringArgs: Iterator[Any] = Iterator(child)
+
+    private lazy val floats: Boolean = child.dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires an ARRAY<FLOAT> or ARRAY<DOUBLE>, got ${other.simpleString}")
+    }
+
+    def select(vec: ArrayData): UTF8String = {
+      val t = program.tags(vec, floats)
+      if (t == null) null else UTF8String.fromString(t)
+    }
+
+    override def eval(input: InternalRow): Any =
+      select(child.eval(input).asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val self = ctx.addReferenceObj("selectTags", this, classOf[SelectTags].getName)
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        ${c.code}
+        UTF8String ${ev.value} = $self.select(${c.isNull} ? null : ${c.value});
+        boolean ${ev.isNull} = ${ev.value} == null;
+      """)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): SelectTags =
+      copy(child = newChild)
+  }
+
+  /** The vocabulary dimension as driver-side entries — one small collect
+    * (the dimension is broadcast-sized, the dual of the reference's
+    * in-memory index, appV2.py:70-71). A null tag_idx never joins a
+    * position, so its row is dropped. */
+  private[graft] def collectEntries(vocab: DataFrame): Seq[Vocab.Entry] =
+    vocab.where(col("tag_idx").isNotNull)
+      .select(col("tag_idx").cast("long"), col("tag_name"), col("category"),
+        col("emit_pos").cast("long"))
+      .collect()
+      .map(r => Vocab.Entry(r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+      .toSeq
+
+  /** (image_id, tags): the id column passes through unchanged — its own
+    * type, its nulls — and the tags come from one SelectTags projection. */
+  private def selectRows(scores: DataFrame, program: SelectionProgram,
+                         idCol: String, vecCol: String): DataFrame = {
+    val vec = scores.schema(vecCol).dataType match {
+      case ArrayType(FloatType | DoubleType, _) => col(vecCol)
+      case _ => col(vecCol).cast("array<double>")
+    }
+    scores.select(col(idCol).as("image_id"),
+      GraftSqlShims.columnOf(SelectTags(GraftSqlShims.exprOf(vec), program)).as("tags"))
+  }
+
+  /** Full pipeline: scores(id, logits ARRAY) × vocab → (image_id, tags),
+    * one row per input row, with the relational contract of the
+    * long-format form (JOIN mode, see [[SelectionProgram]]): an index
+    * outside a row's own [0, len) selects nothing, a null vector gives
+    * "", a null element never passes a threshold and loses every argmax
+    * to a non-null value. No shuffle, no join: one narrow projection.
     *
-    * Output is bit-identical to `pipeline` for every vocab that FITS the
-    * score vectors (same java.lang.Math.exp, same comparisons; the tags
-    * column is a string) — on an OVERRUN vocab the two deliberately
-    * part: the relational form's inner join can only skip (its DuckDB
-    * oracle mirrors the join, keeping the gate engine-vs-engine exact),
-    * while this path and tagImages implement the reference's IndexError
-    * row failure — and numpy's NEGATIVE-index wrap (probs[-1] = last
-    * logit): here per row against the vector length, in tagImages as a
-    * driver-side remap of the vocab against the scorer dimension before
-    * the join. Pinned by TaggingSpec and
-    * the tagger_pipeline_local oracle query. A vocab entry whose tag_idx
-    * reaches the score vector's length fails the ROW (null tags) — the
-    * reference's numpy IndexError, see [[overrunError]]; the old silent
-    * skip was reference-unfaithful (holes — an absent vocab row for an
-    * existing output — remain skips, the correct direction).
-    *
-    * The id column keeps its own family: a STRING id (the image-path ids
-    * scoreImages emits — the documented 100 TB wiring) rides a
-    * string-keyed encoder; anything else takes the long path. The old
-    * unconditional cast("long") turned every path id into NULL and the
-    * output could no longer be joined back to its images. */
+    * DELIBERATE CHANGE from the relational form: rows that share an id
+    * are tagged separately, each from its own vector. The relational
+    * form grouped by id, merged the tags of every row with that id and
+    * repeated the merged string on each; it also gave a null-id row ""
+    * (its equi-join never matches null). The oracle inputs have unique
+    * non-null ids (`embeddings.vec_id`), so the DuckDB gate is unmoved. */
+  def pipeline(scores: DataFrame, vocab: DataFrame,
+               genThreshold: Double = 0.55, charThreshold: Double = 0.60,
+               idCol: String = "image_id", vecCol: String = "logits"): DataFrame =
+    selectRows(scores,
+      SelectionProgram(collectEntries(vocab), genThreshold, charThreshold, joinMode = true),
+      idCol, vecCol)
+
+  /** The same projection in REFERENCE mode (see [[SelectionProgram]]): a
+    * row whose vector the vocab overruns, or that holds a null, fails
+    * with null tags — the reference's per-image IndexError, see
+    * [[overrunError]] — and a negative index wraps per row against the
+    * vector's length. Agrees with [[pipeline]] on every null-free row
+    * whose vector the vocab fits with non-negative indices. Pinned by
+    * TaggingSpec and the tagger_pipeline_local oracle query. */
   def pipelineLocal(scores: DataFrame, vocabEntries: Seq[Vocab.Entry],
                     genThreshold: Double = 0.55, charThreshold: Double = 0.60,
-                    idCol: String = "image_id", vecCol: String = "logits"): DataFrame = {
-    val program = SelectionProgram(vocabEntries, genThreshold, charThreshold)
-    val spark = scores.sparkSession
-    import spark.implicits._
-    val vec = col(vecCol).cast("array<double>").as("logits")
-    scores.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        scores.select(col(idCol).as("image_id"), vec)
-          .as[(String, Array[Double])]
-          .mapPartitions { it => it.map { case (id, v) => (id, program.tags(v)) } }
-          .toDF("image_id", "tags")
-      case _ =>
-        scores.select(col(idCol).cast("long").as("image_id"), vec)
-          .as[(Long, Array[Double])]
-          .mapPartitions { it => it.map { case (id, v) => (id, program.tags(v)) } }
-          .toDF("image_id", "tags")
-    }
-  }
+                    idCol: String = "image_id", vecCol: String = "logits"): DataFrame =
+    selectRows(scores, SelectionProgram(vocabEntries, genThreshold, charThreshold),
+      idCol, vecCol)
 
   /** Deterministic synthetic vocabulary over tag_idx 0..n-1, mirrored
     * exactly by SQL in the DuckDB oracle (see SparkEntry.oracleSql):

@@ -9,9 +9,11 @@ import org.apache.spark.sql.types.DoubleType
 /** Domain optimizer rule (SURVEY.md §7.4 tier (c)): rewrite
   * `sigmoid(clip(x)) >= t` filters into logit space, `x >= ln(t/(1−t))`.
   *
-  * The engine's threshold filter (Tagging.selectTags, mirroring
-  * appV2.py:86-97) compares a clipped sigmoid against a constant. The
-  * sigmoid is strictly increasing and the clip is monotone, so for
+  * A relational threshold filter over long-format scores (the shape of
+  * appV2.py:86-97 that the test-side relational tagging reference
+  * builds; the engine's own tagger selects row-locally in
+  * Tagging.SelectionProgram) compares a clipped sigmoid against a
+  * constant. The sigmoid is strictly increasing and the clip is monotone, so for
   * σ(−30) < t < σ(30) the comparison is equivalent to a bare comparison
   * on the raw logit — no exp() per row, and column pruning can then drop
   * the prob computation from the filter branch altogether. On a 100 TB

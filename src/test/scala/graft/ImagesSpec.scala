@@ -1022,6 +1022,32 @@ class ImagesSpec extends SparkSpec {
     observed.collect() // the one action; metrics accumulate during it
     val m = obs.get
     assert(m("n_total") === 33L && m("n_ok") === 30L && m("n_failed") === 3L)
+    assert(m("n_decode_failed") === 3L && m("n_read_failed") === 0L &&
+      m("n_overrun_failed") === 0L)
+  }
+
+  test("R17 failures by error class: read, decode, vocab overrun") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft_errclass")
+    Files.copy(Paths.get(dir, "portrait.png"), d.resolve("good.png"))
+    Files.copy(Paths.get(dir, "corrupt.png"), d.resolve("bad.png"))
+    Files.createSymbolicLink(d.resolve("ghost.png"), d.resolve("gone.png"))
+    def metrics(vocab: org.apache.spark.sql.DataFrame) = {
+      val (observed, obs) = Images.withRunMetrics(
+        Images.tagImages(spark, d.toString, vocab, Images.FixtureScorer(32)))
+      observed.collect()
+      obs.get
+    }
+    val fits = metrics(ImageFixtures.vocab(spark))
+    assert(fits("n_ok") === 1L && fits("n_failed") === 2L)
+    assert(fits("n_read_failed") === 1L && fits("n_decode_failed") === 1L &&
+      fits("n_overrun_failed") === 0L)
+    val wide = metrics(ImageFixtures.vocab(spark).unionByName(
+      Seq((40L, "wide_tag", "general", 40L))
+        .toDF("tag_idx", "tag_name", "category", "emit_pos")))
+    assert(wide("n_ok") === 0L && wide("n_failed") === 3L)
+    assert(wide("n_read_failed") === 1L && wide("n_decode_failed") === 1L &&
+      wide("n_overrun_failed") === 1L)
   }
 
   test("EP2 full chain + R15 sidecar sink") {
@@ -1076,26 +1102,30 @@ class ImagesSpec extends SparkSpec {
     assert(rows("corrupt.png")._1.startsWith("error:") &&
       !rows("corrupt.png")._1.contains("out of bounds"),
       "decode failures precede get_tags and keep their own message")
-    Images.releaseScored(spark)
   }
 
-  test("tagImages cache lifecycle: one relation per session, released by releaseScored") {
-    Images.releaseScored(spark) // settle: drop any relation a prior test's call owns
-    val before = spark.sparkContext.getPersistentRDDs.size
+  test("tagImages persists nothing") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val t1 = Images.tagImages(spark, dir, ImageFixtures.vocab(spark),
       Images.FixtureScorer(32))
     t1.count()
-    assert(spark.sparkContext.getPersistentRDDs.size === before + 1)
-    // a second invocation in the same session must REPLACE the cached
-    // scored relation, not accumulate a new one alongside it
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
     val t2 = Images.tagImages(spark, dir, ImageFixtures.vocab(spark),
       Images.FixtureScorer(32))
     t2.count()
-    assert(spark.sparkContext.getPersistentRDDs.size === before + 1,
-      "repeat tagImages must replace, not accumulate, its cache")
-    Images.releaseScored(spark)
-    assert(spark.sparkContext.getPersistentRDDs.size === before,
-      "releaseScored must drop the owned relation")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+  }
+
+  test("tagImages is one narrow stage: no Exchange after the read") {
+    val tagged = Images.tagImages(spark, dir, ImageFixtures.vocab(spark),
+      Images.FixtureScorer(32))
+    tagged.collect()
+    // the source's path partitioning is an RDD shuffle BEFORE the read;
+    // from the scan of the read bytes on, the SQL plan is a single map
+    val plan = tagged.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(!plan.contains("InMemory"), plan)
+    assert(!plan.contains("Join"), plan)
   }
 
   test("R15 sidecar path handling: percent-encoded URI, dotted dir + extensionless name") {

@@ -55,11 +55,21 @@ class PlansSpec extends SparkSpec {
 
   test("full tagging pipeline results unchanged under the rule") {
     val vocab = Tagging.syntheticVocab(spark, 64)
-    def run() = Tagging.pipeline(
-      graft.queries.TaggerQueries.scoresFromEmbeddings(spark, "/root/testdata/sf0.001"),
-      vocab).orderBy("image_id").collect().toSeq
-    val base = run()
-    val rewritten = withRule(run())
+    // the relational form over bare clippedSigmoid probs: its threshold
+    // filter is the shape the rule rewrites (the embeddings hold no null
+    // logits, the one input the bare sigmoid scores differently)
+    def frame() = {
+      val scores = graft.queries.TaggerQueries.scoresFromEmbeddings(spark, "/root/testdata/sf0.001")
+      val probs = RelationalTagging.explodeScores(scores)
+        .withColumn("prob", Tagging.clippedSigmoid(col("logit")))
+      RelationalTagging.concatTags(scores, RelationalTagging.selectTags(probs, vocab))
+        .orderBy("image_id")
+    }
+    def exps(df: org.apache.spark.sql.DataFrame) =
+      "exp\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString.toLowerCase).size
+    val base = frame().collect().toSeq
+    val (rewritten, expsUnderRule) = withRule { val f = frame(); (f.collect().toSeq, exps(f)) }
+    assert(expsUnderRule < exps(frame()), "the rule must rewrite the threshold branch")
     assert(base === rewritten)
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Golden-fixture tests for the relational tagging core. Expected strings
+/** Golden-fixture tests for the tagging core. Expected strings
   * were produced by executing the reference's own get_tags/load_tag_mapping
   * (appV2.py:51-101) on identical inputs — they pin:
   * unthresholded rating/quality argmax, argmax tie→lowest idx (via the
@@ -97,13 +97,13 @@ class TaggingSpec extends SparkSpec {
       c("id").as("image_id"),
       tf(sequence(lit(0), lit(15)),
         j => sin(c("id") * 0.37 + j.cast("double") * 1.13) * 40.0).as("logits"))
-    val relational = Tagging.pipeline(scores, vocab)
+    val relational = RelationalTagging.pipeline(scores, vocab)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val local = Tagging.pipelineLocal(scores, entries)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(local === relational)
     // and with non-default thresholds
-    val rel2 = Tagging.pipeline(scores, vocab, 0.9, 0.95)
+    val rel2 = RelationalTagging.pipeline(scores, vocab, 0.9, 0.95)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val loc2 = Tagging.pipelineLocal(scores, entries, 0.9, 0.95)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -119,7 +119,7 @@ class TaggingSpec extends SparkSpec {
       concat(lit("file:/imgs/pic_"), c("id").cast("string"), lit(".png")).as("image_id"),
       tf(sequence(lit(0), lit(15)),
         j => sin(c("id") * 0.37 + j.cast("double") * 1.13) * 40.0).as("logits"))
-    val relational = Tagging.pipeline(scores, vocab)
+    val relational = RelationalTagging.pipeline(scores, vocab)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val local = Tagging.pipelineLocal(scores, entries)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
@@ -139,7 +139,7 @@ class TaggingSpec extends SparkSpec {
       1L -> (Seq(nan, 20.0, -5.0, -6.0, nan) ++ Seq.fill(11)(-40.0)),
       2L -> img1.updated(2, nan))
     val df = rows.toDF("image_id", "logits")
-    val rel = Tagging.pipeline(df, vocab)
+    val rel = RelationalTagging.pipeline(df, vocab)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val loc = Tagging.pipelineLocal(df, entries)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -163,7 +163,7 @@ class TaggingSpec extends SparkSpec {
     // NOTHING for rating — no runner-up fallback — and the general tag
     // emits normally
     val df = Seq(1L -> Seq(5.0, 2.0, -40.0, -40.0, 5.0)).toDF("image_id", "logits")
-    val rel = Tagging.pipeline(df, v)
+    val rel = RelationalTagging.pipeline(df, v)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val loc = Tagging.pipelineLocal(df, entries)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -307,5 +307,123 @@ class TaggingSpec extends SparkSpec {
       Some("index -33 is out of bounds for axis 0 with size 32"))
     assert(Tagging.overrunError(Seq(Vocab.Entry(-32, "t", "general", 0)), 32) ===
       None, "-len is the last VALID negative index")
+  }
+
+  test("pipelineLocal: a null logits vector fails only its own row") {
+    val entries = Vocab.parseJson(vocabJson)
+    val rows = Seq[(Long, Option[Seq[Double]])]((1L, Some(img1)), (2L, None))
+    val out = Tagging.pipelineLocal(rows.toDF("image_id", "logits"), entries)
+      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    assert(out(1L) === Some("safe, masterpiece, long hair, watermark, alice, acme copyright"))
+    assert(out(2L) === None, "a null vector fails its row with null tags")
+  }
+
+  test("pipelineLocal: a null element fails only its own row") {
+    val entries = Vocab.parseJson(vocabJson)
+    val withNull = img1.map(Option(_)).updated(9, None)
+    val rows = Seq[(Long, Seq[Option[Double]])]((1L, img1.map(Option(_))), (2L, withNull))
+    val out = Tagging.pipelineLocal(rows.toDF("image_id", "logits"), entries)
+      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    assert(out(1L).exists(_.startsWith("safe")))
+    assert(out(2L) === None, "a null element fails its row with null tags")
+  }
+
+  test("pipelineLocal: a null LONG id passes through as null") {
+    val entries = Vocab.parseJson(vocabJson)
+    val rows = Seq[(Option[Long], Seq[Double])]((Some(1L), img1), (None, img2))
+    val out = Tagging.pipelineLocal(rows.toDF("image_id", "logits"), entries)
+      .collect().map(r => Option(r.get(0)) -> r.getString(1)).toMap
+    assert(out(None) === "questionable, masterpiece")
+    assert(out(Some(1L)).startsWith("safe"))
+  }
+
+  test("pipelineLocal: an INT id stays INT") {
+    val entries = Vocab.parseJson(vocabJson)
+    val df = Seq((7, img2)).toDF("image_id", "logits")
+    val out = Tagging.pipelineLocal(df, entries)
+    assert(out.schema("image_id").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(out.collect().map(r => r.getInt(0) -> r.getString(1)).toSeq ===
+      Seq(7 -> "questionable, masterpiece"))
+  }
+
+  test("differential: row-local pipeline ≡ the relational form on seeded " +
+      "edge-case vectors, vocabs and id types") {
+    val rnd = new scala.util.Random(20261019L)
+    val cats = Vocab.recognized :+ "unknown_cat"
+    val names = Seq("long_hair", "tag_request", "holiday", "", "blue_sky",
+      "size_mismatch", "alice", "some_model", "watermark", "x")
+    val vocabs = (0 until 6).map { _ =>
+      val n = 4 + rnd.nextInt(20)
+      // indices in [-3, 20): negative, in range and past the end of the
+      // 0..16-long vectors below; emit_pos a permutation (insertion order)
+      val pos = rnd.shuffle((0 until n).toList)
+      (0 until n).map(i => Vocab.Entry(rnd.nextInt(23) - 3,
+        names(rnd.nextInt(names.size)) + (if (rnd.nextBoolean()) s"_$i" else ""),
+        cats(rnd.nextInt(cats.size)), pos(i).toLong))
+    }
+    // clip saturation (±40 → ±30 ties), exact ties, NaN, null elements,
+    // empty, short and null vectors
+    val pool = Seq(40.0, -40.0, 35.0, 0.5, 0.2, -0.2, Double.NaN)
+    def element(): Option[Double] = rnd.nextInt(10) match {
+      case 0 => None
+      case 1 | 2 => Some(pool(rnd.nextInt(pool.size)))
+      case _ => Some(rnd.nextGaussian() * 3.0)
+    }
+    val rows = (0 until 300).map { i =>
+      val vec = if (i % 23 == 0) None else Some(Seq.fill(rnd.nextInt(17))(element()))
+      (i.toLong, vec)
+    }
+    val base = rows.toDF("rk", "logits")
+      .withColumn("int_id", col("rk").cast("int"))
+      .withColumn("str_id", concat(lit("file:/p/"), col("rk").cast("string")))
+      .withColumn("null_id", when(col("rk") % 7 =!= 0, col("rk")))
+    for (vocab <- vocabs; (genT, charT) <- Seq((0.55, 0.60), (0.3, 0.9));
+         vecType <- Seq("array<double>", "array<float>")) {
+      val df = base.withColumn("logits", col("logits").cast(vecType))
+      val vocabDf = Vocab.toDF(spark, vocab)
+      val want = RelationalTagging.pipeline(df, vocabDf, genT, charT, idCol = "rk")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val inputs = df.collect()
+      for (idCol <- Seq("rk", "int_id", "str_id", "null_id")) {
+        val out = Tagging.pipeline(df, vocabDf, genT, charT, idCol = idCol)
+        assert(out.schema("image_id").dataType === df.schema(idCol).dataType)
+        val got = out.collect()
+        assert(got.length === inputs.length)
+        // one narrow projection over a local relation keeps row order,
+        // so output row i is input row i
+        inputs.zip(got).foreach { case (in, o) =>
+          assert(o.get(0) === in.get(in.fieldIndex(idCol)))
+          assert(o.getString(1) === want(in.getLong(0)),
+            s"rk=${in.getLong(0)} $vecType θ=($genT,$charT) vocab=$vocab")
+        }
+      }
+    }
+  }
+
+  test("pipeline is one whole-stage-codegen projection: no Exchange, no join") {
+    val conf = spark.conf
+    val key = "spark.sql.codegen.fallback"
+    val prev = conf.getOption(key)
+    // a codegen compile error must fail here, not fall back silently
+    conf.set(key, "false")
+    try {
+      // array() of built-ins, not a transform() lambda: an HOF input is
+      // itself interpreted and would split the codegen stage
+      val scores = spark.range(50).select(col("id").as("image_id"),
+        array((0 until 16).map(j => sin(col("id") + j) * 10.0): _*).as("logits"))
+      val out = Tagging.pipeline(scores, vocab)
+      val plan = out.queryExecution.executedPlan
+      assert(!plan.toString.contains("Exchange"), plan.toString)
+      assert(!plan.toString.contains("Join"), plan.toString)
+      assert(plan.collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+        .exists(_.toString.contains("graft_select_tags")), plan.toString)
+      assert(out.count() === 50)
+      assert(out.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ===
+        RelationalTagging.pipeline(scores, vocab).collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toMap)
+    } finally prev match {
+      case Some(v) => conf.set(key, v)
+      case None => conf.unset(key)
+    }
   }
 }
