@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry point (driver contract): runs every declared query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE compact JSON line.
@@ -205,12 +204,39 @@ object Bench {
       probePost: Double, probeMtPre: Double, probeMtPost: Double,
       probeMtPreInBand: Boolean, probeMtAttempts: Int)
 
+  /** One query's time: `run` three times, the MEDIAN wall seconds, or
+    * the first failure. The first run absorbs that query's codegen/JIT
+    * compilation (usually the max), and the median is robust to a
+    * one-off shared-VM or GC hiccup in EITHER direction — a min can
+    * flatter a genuinely slower plan off one lucky run, while a single
+    * 32.5s-vs-6.0s spike (round-5 lesson) can't drag the median the way
+    * it drags a mean. Rounds ≤8 reported min-of-2; cross-round deltas
+    * normalize uniform shifts via tools/bench_delta.py --normalize.
+    *
+    * UNTIMED inter-rep hygiene (the System.gc() after each run): queries
+    * that localCheckpoint internally leave their blocks in the block
+    * manager until the driver GCs the RDD references and ContextCleaner
+    * unpersists them. Left to accumulate, ~80 queries of dead blocks
+    * turn into old-gen pressure that surfaces as multi-second GC pauses
+    * *inside* some later query's timing. */
+  def medianOf3(run: => Unit): Either[Throwable, Double] = {
+    val reps = scala.collection.mutable.ArrayBuffer.empty[Double]
+    try {
+      while (reps.size < 3) {
+        val t0 = System.nanoTime()
+        try { run; reps += (System.nanoTime() - t0) / 1e9 }
+        finally System.gc()
+      }
+      Right(reps.sorted.apply(1))
+    } catch { case e: Throwable => Left(e) }
+  }
+
   def main(args: Array[String]): Unit = {
     // second CLI arg (dev loops from a persistent sbt shell): sfDir
     // override — the driver always uses the env form
     val sfDir = args.drop(1).headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // Foreign-CPU acceptance: a capture whose non-graft busy CPU exceeds
     // this fraction of wall x cores ran on a contended machine — refuse
     // it and re-capture, exactly as the probe band does for single-core
@@ -229,12 +255,7 @@ object Bench {
       .map(_.toDouble).getOrElse(0.015)
     val maxCaptures = sys.env.get("SPARK_GRAFT_CAPTURE_ATTEMPTS")
       .map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, "graft-bench")
     // warm the session (codegen/JIT, parquet footer + file-listing cache,
     // Dataset-encoder and checkpoint/observe machinery) so per-query
     // numbers measure plans, not first-job initialization — the
@@ -284,7 +305,10 @@ object Bench {
         s"subset names missing from the query registry: ${unknown.mkString(", ")}")
     }
 
-    def runCapture(): Capture = {
+    // `last`: the final attempt always runs the suite, so the driver
+    // always gets a result line; earlier attempts skip a suite whose
+    // out-of-band 8-thread pre-probe already dooms it (see mtOk)
+    def runCapture(last: Boolean): Capture = {
       // CPU-probe gate (VERDICT r12 #1): refuse to start on an
       // out-of-band machine window — re-probe with backoff until the
       // shared VM calms down, and stamp the probe into the JSON either
@@ -293,41 +317,19 @@ object Bench {
       val (probePre, probePreInBand, probeAttempts) = probeGate()
       mtProbeSec() // discarded: thread-spawn + JIT warmup
       val (probeMtPre, probeMtPreInBand, mtAttempts) = mtProbeGate()
+      if (!probeMtPreInBand && !last)
+        return Capture(Nil, Nil, 0.0, 0.0, probePre, probePreInBand, probeAttempts,
+          Double.NaN, probeMtPre, Double.NaN, probeMtPreInBand, mtAttempts)
       try markCpu() catch { case _: Throwable => () }
       val failed = scala.collection.mutable.ArrayBuffer.empty[String]
       val wallT0 = System.nanoTime()
       val results = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
-      // each query runs THREE times and reports the MEDIAN: the first
-      // run absorbs that query's codegen/JIT compilation (usually the
-      // max), and the median is robust to a one-off shared-VM or GC
-      // hiccup in EITHER direction — a min can flatter a genuinely
-      // slower plan off one lucky run, while a single 32.5s-vs-6.0s
-      // spike (round-5 lesson) can't drag the median the way it drags a
-      // mean. Rounds ≤8 reported min-of-2; cross-round deltas normalize
-      // uniform shifts via tools/bench_delta.py --normalize.
-      //
-      // UNTIMED inter-rep hygiene (the System.gc() between runs):
-      // queries that localCheckpoint internally leave their blocks in
-      // the block manager until the driver GCs the RDD references and
-      // ContextCleaner unpersists them. Left to accumulate, ~80 queries
-      // of dead blocks turn into old-gen pressure that surfaces as
-      // multi-second GC pauses *inside* some later query's timing.
-      val reps = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var bad = false
-      var i = 0
-      while (i < 3 && !bad) {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          reps += (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => bad = true; failed += name }
-        System.gc()
-        i += 1
-      }
-      name -> (if (bad) -1.0 else reps.sorted.apply(1))
-      }
+          val sec = medianOf3(fn(spark, sfDir).count())
+          if (sec.isLeft) failed += name
+          name -> sec.getOrElse(-1.0)
+        }
       // total bench wall (includes all 3 reps + inter-rep GC) — reported
       // separately so "value" stays the sum of per-query medians
       val wallSec = (System.nanoTime() - wallT0) / 1e9
@@ -349,42 +351,50 @@ object Bench {
     // re-run" — runs here instead. Rejected passes are kept in the JSON
     // (wall + foreign CPU) so the capture still self-documents what it
     // refused and why.
-    def foreignLimit(c: Capture): Double = foreignFrac * c.wallSec * cpus.toInt
+    def foreignLimit(c: Capture): Double = foreignFrac * c.wallSec * cpus
     // mt-probe acceptance (VERDICT r14 #8, now gating): a capture whose
     // 8-thread probe ran out of band on EITHER side of the timed window
     // sat in multi-core contention the other two instruments are blind to
     def mtOk(c: Capture): Boolean = c.probeMtPreInBand &&
       c.probeMtPost >= mtProbeBand._1 && c.probeMtPost <= mtProbeBand._2
+    /** Each failed instrument with its readings; None for a clean capture. */
+    def contention(c: Capture): Option[String] = {
+      val why = Seq(
+        Option.when(c.foreignCpu > foreignLimit(c))(
+          f"foreign_cpu_sec ${c.foreignCpu}%.1f exceeds limit " +
+            f"${foreignLimit(c)}%.1f (= $foreignFrac x wall " +
+            f"${c.wallSec}%.1f s x $cpus cores)"),
+        Option.when(!mtOk(c))(
+          f"mt8 probe ${c.probeMtPre}%.3f/${c.probeMtPost}%.3f s " +
+            f"outside band [${mtProbeBand._1}%.2f, ${mtProbeBand._2}%.2f]")
+      ).flatten
+      Option.when(why.nonEmpty)(why.mkString("; "))
+    }
     val rejected = scala.collection.mutable.ArrayBuffer.empty[Capture]
-    var cap = runCapture()
-    while ((cap.foreignCpu > foreignLimit(cap) || !mtOk(cap)) &&
-        rejected.size + 1 < maxCaptures) {
-      val why =
-        if (cap.foreignCpu > foreignLimit(cap))
-          f"foreign_cpu_sec ${cap.foreignCpu}%.1f exceeds limit " +
-            f"${foreignLimit(cap)}%.1f (= $foreignFrac x wall " +
-            f"${cap.wallSec}%.1f s x $cpus cores)"
-        else
-          f"mt8 probe ${cap.probeMtPre}%.3f/${cap.probeMtPost}%.3f s " +
-            f"outside band [${mtProbeBand._1}%.2f, ${mtProbeBand._2}%.2f]"
-      System.err.println(s"[bench] $why — " +
+    var cap = runCapture(last = maxCaptures <= 1)
+    var why = contention(cap)
+    while (why.isDefined && rejected.size + 1 < maxCaptures) {
+      // not the last attempt, so an out-of-band pre-probe skipped the suite
+      val skipped = if (cap.probeMtPreInBand) "" else " (suite skipped)"
+      System.err.println(s"[bench] ${why.get}$skipped — " +
         s"rejecting capture ${rejected.size + 1}/$maxCaptures, " +
         "backing off 30 s and re-capturing")
       rejected += cap
       Thread.sleep(30000)
-      cap = runCapture()
+      cap = runCapture(last = rejected.size + 1 >= maxCaptures)
+      why = contention(cap)
     }
     // still over after maxCaptures passes: stamp it contended and route
     // the full map AWAY from the committed snapshot name (see outName)
-    val contended = cap.foreignCpu > foreignLimit(cap) || !mtOk(cap)
-    if (contended)
-      System.err.println(f"[bench] still contended after ${rejected.size + 1} " +
-        f"captures (foreign_cpu_sec ${cap.foreignCpu}%.1f) — stamping " +
-        "capture_contended and writing the .contended snapshot")
+    val contended = why.isDefined
+    why.foreach(w => System.err.println(s"[bench] still contended after " +
+      s"${rejected.size + 1} captures ($w) — stamping capture_contended " +
+      "and writing the .contended snapshot"))
 
     val results = cap.results
     val failed = cap.failed
     val wallSec = cap.wallSec
+    // a capture whose suite was skipped shows wall_sec 0
     val rejJson = rejected.map(r =>
       s"""{"wall_sec":${fmt(r.wallSec)},"foreign_cpu_sec":${fmt(r.foreignCpu)}}""")
       .mkString("[", ",", "]")

@@ -43,15 +43,7 @@ object CurateCorpus {
     val jaccardT = opt("--jaccard").map(_.toDouble).getOrElse(0.8)
     val sampleMod = opt("--sample-mod").map(_.toLong).getOrElse(0L)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-curate-corpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-curate-corpus")
 
     val t0 = System.nanoTime()
     val report = curate(spark, spark.read.parquet(in), out,

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the expectation fixtures that hash-check the binary-op
   * queries (img_tagger_e2e, mm_features, mm_thumbnails, mm_frame_sample
   * — ImageQueries). Their inputs are deterministic generated media, so
@@ -30,12 +28,7 @@ object MakeExpectations {
     Seq("img_tagger_e2e", "mm_features", "mm_thumbnails", "mm_frame_sample")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-make-expectations")
     Files.createDirectories(Paths.get(fixtureDir))
     queryNames.foreach { name =>
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")

@@ -1,0 +1,66 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Where a query's time goes: for each named query, [[Bench.medianOf3]]'s
+  * time, then the jobs and per-stage table ([[QueryMetrics]]) of the last
+  * of those runs — executed stages only, attempt 0, with the jobs the
+  * query ran while it was being built. With `--plans outDir` it also
+  * writes the query's `explain("formatted")` to `outDir/<query>.txt`.
+  * Each timed run includes draining the listener bus after the query
+  * (milliseconds), which Bench's runs do not.
+  *
+  * Usage: runMain graft.Profile <sfDir> <q1,q2,...> [--plans outDir]
+  *
+  * Runs on `GraftSession.local(GraftSession.cpus)`. Iterative queries
+  * (pagerank, BFS, k-core, components) pin their result with
+  * localCheckpoint, so the written plan shows only the final consumer;
+  * their per-round work is in the stage table. */
+object Profile {
+  def main(args: Array[String]): Unit = {
+    require(args.length == 2 || (args.length == 4 && args(2) == "--plans"),
+      "usage: Profile <sfDir> <q1,q2,...> [--plans outDir]")
+    val sfDir = args(0)
+    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(names.nonEmpty && unknown.isEmpty,
+      s"unknown query names: ${unknown.mkString(", ")}")
+    val plansDir = args.drop(3).headOption
+    plansDir.foreach(d => Files.createDirectories(Paths.get(d)))
+
+    val spark = GraftSession.local(GraftSession.cpus, "graft-profile")
+    val metrics = QueryMetrics.register(spark.sparkContext)
+    try names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      var rep = 0
+      var last: DataFrame = null
+      val sec = Bench.medianOf3 {
+        rep += 1
+        metrics.measure(s"$name#$rep") { last = fn(spark, sfDir); last.count() }
+      }
+      sec match {
+        case Left(e) => println(s"[profile] $name failed in run $rep: $e")
+        case Right(s) =>
+          val stages = metrics.stages(s"$name#$rep")
+          println(f"[profile] $name: median $s%.3f s; last run ${metrics.jobs(s"$name#$rep")} jobs, " +
+            f"${stages.size} stages, executor run ${stages.map(_.runMs).sum} ms")
+          println("stage  tasks   runMs      inMB     srMB     swMB  name")
+          stages.foreach { st =>
+            println(f"${st.id}%5d ${st.tasks}%6d ${st.runMs}%7d ${st.inputBytes / 1e6}%9.1f " +
+              f"${st.shuffleReadBytes / 1e6}%8.1f ${st.shuffleWriteBytes / 1e6}%8.1f  ${st.name.take(60)}")
+          }
+      }
+      for (d <- plansDir; df <- Option(last)) {
+        val out = Paths.get(d, s"$name.txt")
+        Files.writeString(out, df.queryExecution.explainString(FormattedMode))
+        println(s"[profile] wrote $out")
+      }
+    } finally {
+      metrics.close()
+      spark.stop()
+    }
+  }
+}

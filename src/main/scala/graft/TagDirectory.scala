@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference tool's user surface (appV2.py main, EP1): point it at an
@@ -33,16 +32,7 @@ object TagDirectory {
     val genT = opt("--gen").map(_.toDouble).getOrElse(0.55)
     val charT = opt("--char").map(_.toDouble).getOrElse(0.60)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-tag-directory")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-tag-directory")
 
     val vocab = opt("--vocab") match {
       case Some(path) => Vocab.fromJson(spark,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -35,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fixture logits near p≈0.98 collide in f32), forcing every tagger
   * oracle onto struct-ordered argmax — traded away for keeping the
   * strictly-more-precise math. The NaN and empty-name contracts ARE
-  * mirrored exactly (see clippedSigmoid / SelectionProgram).
+  * mirrored exactly (see SelectionProgram).
   *
   * Distribution: the vocabulary is collected to the driver once and
   * compiled into a [[SelectionProgram]]; every row is then tagged inside
@@ -45,29 +45,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * test-side differential reference and as the DuckDB oracle SQL.
   */
 object Tagging {
-
-  /** Clipped sigmoid 1/(1+e^-clip(x,-30,30)) (appV2.py:174). The clip is
-    * semantic, not cosmetic: logits beyond ±30 saturate to the SAME prob,
-    * so argmax tie-breaking (first in category-index insertion order,
-    * numpy argmax contract) can engage where raw logits would differ.
-    *
-    * NaN PROPAGATES (reference parity): np.clip(NaN) is NaN and the
-    * reference's σ(NaN) = NaN then fails every `>= θ` comparison (numpy
-    * comparisons with NaN are False) while WINNING np.argmax (NaN
-    * poisons numpy's running maximum). Spark's least/greatest would
-    * instead clip NaN to 30 (NaN sorts greatest), silently scoring a
-    * broken logit as near-certain — the explicit isnan branch keeps the
-    * reference's semantics. A NULL logit does NOT propagate: least and
-    * greatest skip a null argument, so it scores σ(30); callers that
-    * may see null logits guard them (the relational test reference
-    * does). SigmoidThresholdRewrite matches this exact shape;
-    * SelectionProgram.sigmoid is its per-row twin. */
-  def clippedSigmoid(x: Column): Column = {
-    val xd = x.cast("double")
-    val s = lit(1.0) /
-      (lit(1.0) + exp(-greatest(least(xd, lit(30.0)), lit(-30.0))))
-    when(isnan(xd), xd).otherwise(s)
-  }
 
   /** appV2 parity for a vocabulary that OVERRUNS the model's output
     * dimension (appV2.py:79,92 — `probs[categories[cat]]`): numpy fancy
@@ -122,11 +99,14 @@ object Tagging {
       thresholdLanes: Array[(Array[Int], Array[String], Double)],
       maxIdx: Int, minIdx: Int, joinMode: Boolean) extends Serializable {
 
-    // identical double math to Spark's exp builtin (java.lang.Math.exp
-    // in codegen) → bit-identical probs and therefore identical
-    // comparisons vs clippedSigmoid. NaN PROPAGATES, mirroring
-    // clippedSigmoid's isnan branch and the reference (np.clip(NaN) is
-    // NaN): a NaN prob wins argmax (numpy's poisoned running maximum ≡
+    // clipped sigmoid 1/(1+e^-clip(x,-30,30)) (appV2.py:174): the clip
+    // is semantic — logits beyond ±30 saturate to the SAME prob, so
+    // argmax tie-breaking (first in insertion order, numpy's contract)
+    // engages where raw logits would differ. Identical double math to
+    // Spark's exp builtin (java.lang.Math.exp in codegen) → bit-identical
+    // probs vs the test-side column form, RelationalTagging.clippedSigmoid.
+    // NaN PROPAGATES, mirroring the reference (np.clip(NaN) is NaN):
+    // a NaN prob wins argmax (numpy's poisoned running maximum ≡
     // Double.compare treating NaN greatest) but is excluded from every
     // threshold lane (numpy `NaN >= θ` is False).
     @inline private def sigmoid(x: Double): Double =

@@ -1,105 +1,33 @@
 package graft
 
-import graft.plans.SigmoidThresholdRewrite
 import org.apache.spark.sql.functions._
 
-/** The sigmoid→logit filter rewrite: plan actually loses its exp(), and
-  * results are unchanged on the fixture pipeline. */
+/** Planner mechanisms the engine relies on: the extension entry point,
+  * AQE skew splitting, partitioning reuse, runtime pruning, and the plan
+  * shapes of queries whose scale posture depends on them. */
 class PlansSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations = Seq(SigmoidThresholdRewrite)
-    try f finally spark.experimental.extraOptimizations = Nil
-  }
-
-  test("threshold filter loses exp() under the rule") {
-    // a non-local source so ConvertToLocalRelation can't pre-evaluate
-    def frame = spark.range(10)
-      .withColumn("logit", (col("id") - 5).cast("double"))
-      .filter(Tagging.clippedSigmoid(col("logit")) >= lit(0.55))
-    val before = frame.queryExecution.optimizedPlan.toString
-    assert(before.toLowerCase.contains("exp("))
-    withRule {
-      val df2 = frame
-      val plan2 = df2.queryExecution.optimizedPlan.toString
-      assert(!plan2.toLowerCase.contains("exp("))
-      // σ(id−5) ≥ 0.55 ⟺ id−5 ≥ logit(0.55) ≈ 0.2007 ⟺ id ≥ 6
-      assert(df2.select("id").collect().map(_.getLong(0)).sorted ===
-        Array(6L, 7L, 8L, 9L))
-    }
-  }
-
-  test("all eight comparison spellings rewrite (strict/non-strict, both orientations)") {
-    // σ is strictly monotone, so every spelling is equally rewriteable —
-    // a user writing `> t` instead of `>= t` must not silently keep the
-    // per-row exp() on the hot path
-    def frame(pred: org.apache.spark.sql.Column) = spark.range(10)
-      .withColumn("logit", (col("id") - 5).cast("double")).filter(pred)
-    val s = Tagging.clippedSigmoid(col("logit"))
-    val t = lit(0.55)
-    val cases: Seq[(org.apache.spark.sql.Column, Seq[Long])] = Seq(
-      (s >= t, Seq(6L, 7L, 8L, 9L)), (s > t, Seq(6L, 7L, 8L, 9L)),
-      (s < t, Seq(0L, 1L, 2L, 3L, 4L, 5L)), (s <= t, Seq(0L, 1L, 2L, 3L, 4L, 5L)),
-      (t > s, Seq(0L, 1L, 2L, 3L, 4L, 5L)), (t >= s, Seq(0L, 1L, 2L, 3L, 4L, 5L)),
-      (t < s, Seq(6L, 7L, 8L, 9L)), (t <= s, Seq(6L, 7L, 8L, 9L)))
-    withRule {
-      for ((pred, want) <- cases) {
-        val df = frame(pred)
-        assert(!df.queryExecution.optimizedPlan.toString.toLowerCase.contains("exp("),
-          s"spelling $pred kept its exp()")
-        assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq === want)
-      }
-    }
-  }
-
-  test("full tagging pipeline results unchanged under the rule") {
-    val vocab = Tagging.syntheticVocab(spark, 64)
-    // the relational form over bare clippedSigmoid probs: its threshold
-    // filter is the shape the rule rewrites (the embeddings hold no null
-    // logits, the one input the bare sigmoid scores differently)
-    def frame() = {
-      val scores = graft.queries.TaggerQueries.scoresFromEmbeddings(spark, "/root/testdata/sf0.001")
-      val probs = RelationalTagging.explodeScores(scores)
-        .withColumn("prob", Tagging.clippedSigmoid(col("logit")))
-      RelationalTagging.concatTags(scores, RelationalTagging.selectTags(probs, vocab))
-        .orderBy("image_id")
-    }
-    def exps(df: org.apache.spark.sql.DataFrame) =
-      "exp\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString.toLowerCase).size
-    val base = frame().collect().toSeq
-    val (rewritten, expsUnderRule) = withRule { val f = frame(); (f.collect().toSeq, exps(f)) }
-    assert(expsUnderRule < exps(frame()), "the rule must rewrite the threshold branch")
-    assert(base === rewritten)
-  }
-
   test("GraftExtensions registers the rule + native functions on a SparkSessionExtensions") {
-    // the spark.sql.extensions entry point: injection must succeed on a
-    // fresh extensions container (full-session wiring is exercised via
-    // experimental.extraOptimizations above — same rule object), and the
-    // injected graft_cosine builder must construct the native expression
+    // the spark.sql.extensions entry point, on a fresh extensions
+    // container: its one planner rule is the top-k strategy (no
+    // optimizer rule is injected), and every GraftFunctions name is
+    // registered. The build/register methods are
+    // private[sql] in Scala but public in bytecode, hence reflection.
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.plans.GraftExtensions().apply(ext)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val arr = Literal.create(Array(1.0f, 0.0f), ArrayType(FloatType, containsNull = false))
-    val built = graft.functions.CosineSimilarity(arr, arr)
-    assert(built.checkInputDataTypes() ===
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess)
-  }
-
-  test("rule leaves out-of-clip-range thresholds alone (σ saturates)") {
-    val df = Seq((1L, 31.0), (2L, 35.0)).toDF("id", "logit")
-      .filter(Tagging.clippedSigmoid(col("logit")) >= lit(1.0 - 1e-14))
-    withRule {
-      val df2 = Seq((1L, 31.0), (2L, 35.0)).toDF("id", "logit")
-        .filter(Tagging.clippedSigmoid(col("logit")) >= lit(1.0 - 1e-14))
-      // σ(clip(x)) caps at σ(30) < 1-1e-14: both rows must be filtered out,
-      // which the naive algebraic rewrite (x >= logit(t)≈32.2 keeps id=2...
-      // wait, logit(1-1e-14)≈32.2 > 31 but < 35) would get WRONG for id=2.
-      // The in-range guard keeps the original semantics.
-      assert(df2.count() === 0)
-    }
+    def build(method: String): Seq[_] = ext.getClass
+      .getMethod(method, classOf[org.apache.spark.sql.SparkSession])
+      .invoke(ext, spark).asInstanceOf[Seq[_]]
+    assert(build("buildPlannerStrategies") === Seq(graft.plans.TopKPerGroupStrategy))
+    assert(build("buildOptimizerRules").isEmpty)
+    val registry = ext.getClass.getMethod("registerFunctions", classOf[FunctionRegistry])
+      .invoke(ext, new SimpleFunctionRegistry).asInstanceOf[FunctionRegistry]
+    val names = graft.functions.GraftFunctions.all.map(_._1)
+    assert(names.nonEmpty)
+    names.foreach(n => assert(registry.functionExists(FunctionIdentifier(n)), n))
   }
 
   test("AQE splits a skewed sort-merge join partition (the residual skew guard)") {

@@ -28,7 +28,7 @@ class PropertiesSpec extends SparkSpec {
 
   test("property: sigmoid bounded in (0,1) across extreme logits") {
     val xs = samples(Gen.chooseNum(-200.0, 200.0), 40)
-    val ps = xs.toDF("x").select(Tagging.clippedSigmoid(col("x")).as("p"))
+    val ps = xs.toDF("x").select(RelationalTagging.clippedSigmoid(col("x")).as("p"))
       .collect().map(_.getDouble(0))
     assert(ps.forall(p => p > 0.0 && p < 1.0))
   }

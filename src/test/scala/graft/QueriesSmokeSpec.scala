@@ -1,11 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftTestShims
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Every declared query must build and execute on sf0.001 — a fast
   * regression net under `sbt test` (the oracle hash gate runs via
@@ -24,12 +19,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * recorded. Since r12 each budget line also pins SHUFFLE-WRITE BYTES
   * (format: `name jobs stages bytes`) with a 25%+64KB tolerance band —
   * the stage count can stay flat while a broadcast silently falls back
-  * to sort-merge; the write volume is what grows. Attribution is by job group: Spark propagates local
-  * properties into AQE stage-materialization and broadcast threads
-  * (SPARK-33933), so suites running concurrently on the shared session
-  * cannot pollute the counts. Budgets are tied to the test config
-  * (local[4], shuffle.partitions=4, sf0.001); after a deliberate plan
-  * change, regenerate with
+  * to sort-merge; the write volume is what grows. The counts come from
+  * [[QueryMetrics]] (attribution by job group, attempt-0 executed
+  * stages). Budgets are tied to the test config (local[4],
+  * shuffle.partitions=4, sf0.001); after a deliberate plan change,
+  * regenerate with
   * `GRAFT_REGEN_JOB_BUDGETS=1 sbt "testOnly graft.QueriesSmokeSpec"`.
   *
   * Job/stage tolerance (VERDICT r14 #1): AQE occasionally materializes
@@ -43,49 +37,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * ROUND or per CONSUMER, blowing well past the band. Regeneration
   * takes max(observed, committed) per column so a lucky fast run can
   * never re-tighten a budget below a previously observed legitimate
-  * run (ADVICE r14 #1); set GRAFT_REGEN_JOB_BUDGETS=fresh to drop the
-  * floor after a deliberate plan improvement that lowers counts. */
+  * run (ADVICE r14 #1), and it FAILS, naming the rows, when a count is
+  * over its committed value by more than the gate's band: only in-band
+  * variance may raise a budget silently, so regenerating cannot absorb
+  * a regression. Set GRAFT_REGEN_JOB_BUDGETS=fresh to write the
+  * observed counts exactly, after a deliberate plan change. */
 class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val budgetPath = Paths.get("fixtures/job_budgets.txt")
-  private val groupPrefix = "graft-budget:"
-
-  private val jobsByQuery = new ConcurrentHashMap[String, AtomicInteger]()
-  private val stagesByQuery = new ConcurrentHashMap[String, AtomicInteger]()
-  private val shuffleBytesByQuery = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private val stageOwner = new ConcurrentHashMap[Int, String]()
-
-  private val listener = new SparkListener {
-    override def onJobStart(job: SparkListenerJobStart): Unit = {
-      val group = Option(job.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      group.filter(_.startsWith(groupPrefix)).foreach { g =>
-        val name = g.stripPrefix(groupPrefix)
-        jobsByQuery.computeIfAbsent(name, _ => new AtomicInteger).incrementAndGet()
-        job.stageIds.foreach(id => stageOwner.put(id, name))
-      }
-    }
-    override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
-      // attempt 0 only: a scheduler retry/resubmission re-fires the
-      // completion event for the same stage, and the committed budgets
-      // are exact snapshots with zero headroom — a transient fetch
-      // failure must not trip the gate (ADVICE r11)
-      if (st.stageInfo.attemptNumber != 0) return
-      val name = stageOwner.get(st.stageInfo.stageId)
-      if (name != null) {
-        stagesByQuery.computeIfAbsent(name, _ => new AtomicInteger).incrementAndGet()
-        // shuffle-WRITE bytes: the runtime dual of the stage-count pin.
-        // A plan can keep its stage count while regressing to a wider
-        // exchange (a broadcast silently falling back to sort-merge
-        // ships the big side through the shuffle) — the write side is
-        // the one that grows (VERDICT r11 #5)
-        shuffleBytesByQuery
-          .computeIfAbsent(name, _ => new java.util.concurrent.atomic.AtomicLong)
-          .addAndGet(st.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
 
   /** Shuffle-byte tolerance: exact counts are NOT reproducible the way
     * job/stage counts are (lz4 block boundaries, AQE coalesce grouping,
@@ -97,26 +57,38 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     actual > budget + (budget / 4) + 65536L
 
   // registered at construction so every test (and a filtered testOnly -z
-  // run) records counts; removed in afterAll — the session is shared
+  // run) records counts; closed in afterAll — the session is shared
   // per-JVM, so a listener left behind would accumulate one copy per
   // suite instantiation and double-count repeated runs (ADVICE r11)
-  spark.sparkContext.addSparkListener(listener)
+  private val metrics = QueryMetrics.register(spark.sparkContext)
 
   override protected def afterAll(): Unit = {
-    spark.sparkContext.removeSparkListener(listener)
+    metrics.close()
     super.afterAll()
   }
 
-  /** Run `body` under an attributed job group, flush the listener bus,
-    * and return (jobs, executed stages) recorded for it. */
-  private def measured(tag: String)(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(groupPrefix + tag, s"graft budget sweep: $tag",
-      interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    GraftTestShims.waitListenerBusEmpty(sc)
-    (Option(jobsByQuery.get(tag)).map(_.get).getOrElse(0),
-      Option(stagesByQuery.get(tag)).map(_.get).getOrElse(0))
+  private def readBudgets(): Map[String, (Int, Int, Long)] =
+    scala.jdk.CollectionConverters.IteratorHasAsScala(
+      Files.lines(budgetPath).iterator).asScala
+      .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
+        val Array(n, j, s, b) = line.split(" ")
+        n -> ((j.toInt, s.toInt, b.toLong))
+      }.toMap
+
+  /** The gate: why `actual` (jobs, executed stages, shuffle-write bytes)
+    * is over `budget` by more than its band, or None. +1 job / +2 stages
+    * is the AQE rematerialization variance band (see class scaladoc);
+    * real regressions scale with rounds or consumers and blow past it. */
+  private def overBudget(n: String, actual: (Int, Int, Long),
+                         budget: (Int, Int, Long)): Option[String] = {
+    val ((j, s, b), (bj, bs, bb)) = (actual, budget)
+    if (j > bj + 1 || s > bs + 2)
+      Some(s"$n: jobs $j (budget $bj + 1), executed stages $s (budget $bs + 2)")
+    else if (shuffleBytesOver(b, bb))
+      Some(s"$n: shuffle-write $b bytes (budget $bb + 25% band) — a " +
+        "broadcast fell back to shuffle, a partial agg disengaged, or " +
+        "the exchange got wider")
+    else None
   }
 
   test("entry returns rows (driver smoke contract)") {
@@ -132,12 +104,12 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     import org.apache.spark.sql.functions.{col, sum}
     def base() = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey")).agg(sum(col("o_totalprice")).as("v"))
-    val (_, once) = measured("selftest-once") { base().count() }
+    metrics.measure("selftest-once") { base().count() }
     // two separate actions re-plan from scratch: the scan + shuffle map
     // stage executes twice, and the counter must see it
-    val (_, twice) = measured("selftest-twice") {
-      val b = base(); b.count(); b.count()
-    }
+    metrics.measure("selftest-twice") { val b = base(); b.count(); b.count() }
+    val (once, twice) =
+      (metrics.stages("selftest-once").size, metrics.stages("selftest-twice").size)
     assert(once > 0, "no stages recorded for a shuffling query")
     assert(twice > once,
       s"stage counter blind to repeated execution: once=$once twice=$twice")
@@ -145,7 +117,7 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"query $name executes on sf0.001") {
-      val (_, _) = measured(name) { assert(fn(spark, sfDir).count() >= 0) }
+      metrics.measure(name) { assert(fn(spark, sfDir).count() >= 0) }
     }
   }
 
@@ -169,21 +141,16 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   sf01Names.foreach { name =>
     test(s"query $name executes on sf0.01 (second-SF budget sweep)") {
       val fn = SparkEntry.queries(name)
-      val (_, _) = measured(sf01Prefix + name) {
-        assert(fn(spark, sf01Dir).count() >= 0)
-      }
+      metrics.measure(sf01Prefix + name) { assert(fn(spark, sf01Dir).count() >= 0) }
     }
   }
 
   test("runtime job/stage/shuffle-byte costs stay within committed budgets") {
-    GraftTestShims.waitListenerBusEmpty(spark.sparkContext)
     // both sections: bare names are the sf0.001 full-registry sweep,
     // `sf0.01:`-prefixed names the second-SF top-20 sweep
     val names = SparkEntry.queries.keySet ++ sf01Names.map(sf01Prefix + _)
     val actual: Map[String, (Int, Int, Long)] = names.iterator.map { n =>
-      n -> ((Option(jobsByQuery.get(n)).map(_.get).getOrElse(0),
-        Option(stagesByQuery.get(n)).map(_.get).getOrElse(0),
-        Option(shuffleBytesByQuery.get(n)).map(_.get).getOrElse(0L)))
+      n -> ((metrics.jobs(n), metrics.stages(n).size, metrics.shuffleWriteBytes(n)))
     }.toMap
     // a filtered run (testOnly -z) records nothing for skipped queries —
     // only judge what actually ran in this suite instance
@@ -200,16 +167,21 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         s"budget regeneration needs a full-suite run; ran ${ran.size}/${names.size}")
       // default regen keeps committed values as a floor (max per column)
       // so scheduler-variance can't silently re-tighten a budget below a
-      // previously observed run and re-arm the flake (ADVICE r14 #1);
-      // `fresh` writes exact observed counts for deliberate plan wins
+      // previously observed run and re-arm the flake (ADVICE r14 #1), and
+      // refuses growth past the gate's band, which would otherwise ratchet
+      // a regression into the budget; `fresh` writes exact observed
+      // counts for deliberate plan changes
       val floor: Map[String, (Int, Int, Long)] =
         if (regenMode.contains("fresh") || !Files.exists(budgetPath)) Map.empty
-        else scala.jdk.CollectionConverters.IteratorHasAsScala(
-          Files.lines(budgetPath).iterator).asScala
-          .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-            val Array(n, j, s, b) = line.split(" ")
-            n -> ((j.toInt, s.toInt, b.toLong))
-          }.toMap.filter { case (n, _) => names.contains(n) }
+        else readBudgets().filter { case (n, _) => names.contains(n) }
+      val over = ran.toSeq.sortBy(_._1).flatMap { case (n, a) =>
+        floor.get(n).flatMap(overBudget(n, a, _))
+      }
+      assert(over.isEmpty,
+        s"\n${over.size} queries grew past their committed budget's band; " +
+          s"regeneration raises budgets only within the band — fix the " +
+          s"regression, or regenerate with GRAFT_REGEN_JOB_BUDGETS=fresh " +
+          s"if the growth is deliberate:\n${over.mkString("\n")}")
       val body = ran.toSeq.sortBy(_._1)
         .map { case (n, (j, s, b)) =>
           val (fj, fs, fb) = floor.getOrElse(n, (0, 0, 0L))
@@ -223,32 +195,14 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } else {
       assert(Files.exists(budgetPath),
         s"$budgetPath missing — regenerate with GRAFT_REGEN_JOB_BUDGETS=1")
-      val budget: Map[String, (Int, Int, Long)] =
-        scala.jdk.CollectionConverters.IteratorHasAsScala(
-          Files.lines(budgetPath).iterator).asScala
-          .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-            val Array(n, j, s, b) = line.split(" ")
-            n -> ((j.toInt, s.toInt, b.toLong))
-          }.toMap
+      val budget = readBudgets()
       val stale = budget.keySet -- names
       assert(stale.isEmpty,
         s"budgets for queries no longer in the registry (regenerate): $stale")
       val missing = ran.keySet -- budget.keySet
       assert(missing.isEmpty,
         s"queries without a committed job budget (regenerate): $missing")
-      val over = ran.toSeq.sortBy(_._1).flatMap { case (n, (j, s, b)) =>
-        val (bj, bs, bb) = budget(n)
-        // +1 job / +2 stages: the AQE rematerialization variance band
-        // (see class scaladoc); real regressions scale with rounds or
-        // consumers and blow past it
-        if (j > bj + 1 || s > bs + 2)
-          Some(s"$n: jobs $j (budget $bj + 1), executed stages $s (budget $bs + 2)")
-        else if (shuffleBytesOver(b, bb))
-          Some(s"$n: shuffle-write $b bytes (budget $bb + 25% band) — a " +
-            "broadcast fell back to shuffle, a partial agg disengaged, or " +
-            "the exchange got wider")
-        else None
-      }
+      val over = ran.toSeq.sortBy(_._1).flatMap { case (n, a) => overBudget(n, a, budget(n)) }
       assert(over.isEmpty,
         s"\n${over.size} queries ran more Spark work than their committed " +
           s"budget — a repeated subtree, a disengaged exchange reuse, a " +
@@ -260,12 +214,11 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   test("the shuffle-byte detector fires for real (not vacuously green)") {
     import org.apache.spark.sql.functions.{col, sum}
     // a shuffling query must RECORD bytes through the listener path...
-    val (_, _) = measured("selftest-bytes") {
+    metrics.measure("selftest-bytes") {
       Tables.orders(spark, sfDir)
         .groupBy(col("o_custkey")).agg(sum(col("o_totalprice")).as("v")).count()
     }
-    val recorded =
-      Option(shuffleBytesByQuery.get("selftest-bytes")).map(_.get).getOrElse(0L)
+    val recorded = metrics.shuffleWriteBytes("selftest-bytes")
     assert(recorded > 0L,
       "listener recorded zero shuffle-write bytes for a shuffling query")
     // ...and the comparator must flag a broadcast→shuffle-scale jump
@@ -274,6 +227,21 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "comparator blind to a 2x shuffle growth")
     assert(!shuffleBytesOver(recorded + recorded / 10, recorded),
       "comparator flags 10% codec noise — band too tight")
+  }
+
+  test("jobs run while a query is being built count toward that query") {
+    import org.apache.spark.sql.functions.{col, sum}
+    // the dedup/graph shape: an eager localCheckpoint while the DataFrame
+    // is constructed runs a job before the caller's action does
+    def build() = Tables.orders(spark, sfDir)
+      .groupBy(col("o_custkey")).agg(sum(col("o_totalprice")).as("v"))
+      .localCheckpoint()
+    metrics.measure("selftest-build") { build() }
+    metrics.measure("selftest-build-run") { build().count() }
+    val (built, run) = (metrics.jobs("selftest-build"), metrics.jobs("selftest-build-run"))
+    assert(built > 0 && metrics.stages("selftest-build").nonEmpty,
+      "the checkpoint job run during construction was not attributed")
+    assert(run > built, s"the action after construction was not counted: $built vs $run")
   }
 
   test("plan hygiene: no query plans an un-broadcast CartesianProduct") {

@@ -19,6 +19,25 @@ import org.apache.spark.sql.functions._
   * TaggerQueries is the independent oracle of the same contract. */
 object RelationalTagging {
 
+  /** Clipped sigmoid 1/(1+e^-clip(x,-30,30)) (appV2.py:174), the column
+    * twin of `SelectionProgram`'s per-row sigmoid.
+    *
+    * NaN PROPAGATES (reference parity): np.clip(NaN) is NaN and the
+    * reference's σ(NaN) = NaN then fails every `>= θ` comparison (numpy
+    * comparisons with NaN are False) while WINNING np.argmax (NaN
+    * poisons numpy's running maximum). Spark's least/greatest would
+    * instead clip NaN to 30 (NaN sorts greatest), silently scoring a
+    * broken logit as near-certain — the explicit isnan branch keeps the
+    * reference's semantics. A NULL logit does NOT propagate: least and
+    * greatest skip a null argument, so it scores σ(30); [[pipeline]]
+    * guards null logits itself. */
+  def clippedSigmoid(x: Column): Column = {
+    val xd = x.cast("double")
+    val s = lit(1.0) /
+      (lit(1.0) + exp(-greatest(least(xd, lit(30.0)), lit(-30.0))))
+    when(isnan(xd), xd).otherwise(s)
+  }
+
   /** Vector → long format: (id, tag_idx LONG, logit DOUBLE). posexplode is
     * the Spark dual of numpy fancy-indexing over the score vector
     * (appV2.py:79,92). */
@@ -125,7 +144,7 @@ object RelationalTagging {
     // clippedSigmoid would score it σ(30), because least/greatest skip
     // nulls, and that is how this form behaved while it was the engine's
     val probs = explodeScores(scores, idCol, vecCol)
-      .withColumn("prob", when(col("logit").isNotNull, Tagging.clippedSigmoid(col("logit"))))
+      .withColumn("prob", when(col("logit").isNotNull, clippedSigmoid(col("logit"))))
     val selected = selectTags(probs, vocab, genThreshold, charThreshold)
     concatTags(scores.select(col(idCol).as("image_id")), selected)
   }

@@ -68,7 +68,7 @@ class TaggingSpec extends SparkSpec {
 
   test("clipped sigmoid: bounds and saturation σ(31)==σ(30)") {
     val df = Seq(-100.0, -31.0, -30.0, 0.0, 30.0, 31.0, 100.0).toDF("x")
-      .select(Tagging.clippedSigmoid(col("x")).as("p"))
+      .select(RelationalTagging.clippedSigmoid(col("x")).as("p"))
     val ps = df.collect().map(_.getDouble(0))
     assert(ps.forall(p => p > 0.0 && p < 1.0))
     assert(ps(0) === ps(1) && ps(1) === ps(2)) // clip at -30
