@@ -142,8 +142,8 @@ object CurateCorpus {
       .union(cand.select(col("id2"))).distinct()
     // exact verify via the shared sorted-merge array kernel (same path
     // as dedup_minhash_lsh) — only candidate docs are ever shingled
-    val arrs = TextOps.shingleArraysLocal(
-      afterExact.join(candDocs, "doc_id"), "doc_id", "text", 3).localCheckpoint()
+    val arrs = TextOps.pinShingleArrays(TextOps.shingleArraysLocal(
+      afterExact.join(candDocs, "doc_id"), "doc_id", "text", 3))
     val dupPairs = TextOps.scoredPairs(cand, arrs, "doc_id", jaccardT)
       .select(col("id1").as("src"), col("id2").as("dst"))
     val comp = ops.Components.connectedComponents(dupPairs)

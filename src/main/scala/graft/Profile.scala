@@ -2,13 +2,18 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.GraftSparkInternals
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Where a query's time goes: for each named query, [[Bench.medianOf3]]'s
   * time, then the jobs and per-stage table ([[QueryMetrics]]) of the last
   * of those runs — executed stages only, attempt 0, with the jobs the
-  * query ran while it was being built. With `--plans outDir` it also
+  * query ran while it was being built, and each run's codegen work: the
+  * Janino compilations it triggered and the seconds they took (JVM-wide
+  * counters, read around the run; the first run of a query compiles
+  * most). Stages are named by operator scope. With `--plans outDir` it also
   * writes the query's `explain("formatted")` to `outDir/<query>.txt`.
   * Each timed run includes draining the listener bus after the query
   * (milliseconds), which Bench's runs do not.
@@ -37,9 +42,13 @@ object Profile {
       val fn = SparkEntry.queries(name)
       var rep = 0
       var last: DataFrame = null
+      val codegen = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
       val sec = Bench.medianOf3 {
         rep += 1
-        metrics.measure(s"$name#$rep") { last = fn(spark, sfDir); last.count() }
+        val (n0, t0) = (GraftSparkInternals.codegenCompilations, CodeGenerator.compileTime)
+        try metrics.measure(s"$name#$rep") { last = fn(spark, sfDir); last.count() }
+        finally codegen += ((GraftSparkInternals.codegenCompilations - n0,
+          (CodeGenerator.compileTime - t0) / 1e9))
       }
       sec match {
         case Left(e) => println(s"[profile] $name failed in run $rep: $e")
@@ -47,10 +56,12 @@ object Profile {
           val stages = metrics.stages(s"$name#$rep")
           println(f"[profile] $name: median $s%.3f s; last run ${metrics.jobs(s"$name#$rep")} jobs, " +
             f"${stages.size} stages, executor run ${stages.map(_.runMs).sum} ms")
+          println(s"[profile] $name: codegen per run ${codegen.map(_._1).mkString("/")} " +
+            s"compilations, ${codegen.map(c => f"${c._2}%.2f").mkString("/")} s compiling")
           println("stage  tasks   runMs      inMB     srMB     swMB  name")
           stages.foreach { st =>
             println(f"${st.id}%5d ${st.tasks}%6d ${st.runMs}%7d ${st.inputBytes / 1e6}%9.1f " +
-              f"${st.shuffleReadBytes / 1e6}%8.1f ${st.shuffleWriteBytes / 1e6}%8.1f  ${st.name.take(60)}")
+              f"${st.shuffleReadBytes / 1e6}%8.1f ${st.shuffleWriteBytes / 1e6}%8.1f  ${st.name}")
           }
       }
       for (d <- plansDir; df <- Option(last)) {

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.{GraftListenerBus, SparkContext}
+import org.apache.spark.{GraftSparkInternals, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-query Spark work: the jobs a query starts and the stages it
@@ -22,7 +22,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * Only attempt 0 of a stage counts: a scheduler retry re-fires the
   * completion event for the same stage, and a transient fetch failure
   * must not read as more work. Skipped stages fire no completion event,
-  * so the stages are the EXECUTED ones.
+  * so the stages are the EXECUTED ones. A stage is named by the operator
+  * scopes of its RDDs, ending at its own (its call site when none has
+  * one).
   *
   * Register once per session with [[QueryMetrics.register]] and [[close]]
   * when done: a listener left on a shared session would count every later
@@ -48,7 +50,9 @@ final class QueryMetrics private (sc: SparkContext) extends SparkListener {
     if (si.attemptNumber == 0 && tag != null) {
       val m = si.taskMetrics
       stagesByTag.computeIfAbsent(tag, _ => new ConcurrentLinkedQueue[Stage])
-        .add(Stage(si.stageId, si.name.takeWhile(_ != '\n'), si.numTasks,
+        .add(Stage(si.stageId,
+          GraftSparkInternals.stageScopes(si).getOrElse(si.name.takeWhile(_ != '\n')),
+          si.numTasks,
           m.executorRunTime, m.inputMetrics.bytesRead,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
     }
@@ -60,7 +64,7 @@ final class QueryMetrics private (sc: SparkContext) extends SparkListener {
     sc.setJobGroup(groupPrefix + tag, s"graft query: $tag", interruptOnCancel = false)
     try body finally {
       sc.clearJobGroup()
-      GraftListenerBus.drain(sc)
+      GraftSparkInternals.drain(sc)
     }
   }
 

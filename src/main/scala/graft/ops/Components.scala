@@ -1,39 +1,49 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-/** Distributed connected components over an undirected edge list —
-  * the missing last stage of every near-dup pipeline: pair lists
-  * (minhash/simhash/jaccard candidates) must become CLUSTERS with one
-  * canonical keeper per cluster before documents can be dropped, and a
-  * driver-side union-find does not exist at 100 TB.
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** Connected components over an undirected edge list — the last stage
+  * of every near-dup pipeline: pair lists (minhash/simhash/jaccard
+  * candidates) must become CLUSTERS with one canonical keeper per
+  * cluster before documents can be dropped.
   *
-  * Algorithm: min-label propagation WITH POINTER DOUBLING, a
-  * driver-controlled loop. Each materialized round is one propagation
-  * hop (every node adopts the minimum label among itself and its
-  * neighbors — self-loops in the edge relation make that a single
-  * join + min-aggregation) followed by one shortcut hop
-  * (next(v) = label(label(v))), so label chains halve every round and
-  * convergence takes O(log diameter) rounds, not O(diameter) — in the
-  * family of Kiveris et al. "Connected Components in MapReduce and
-  * Beyond" (SoCC'14) and the hash-to-min scheme of Rastogi et al.
-  * (ICDE'13). Dedup clusters usually have tiny diameters (≤3), but a
-  * chain of pairwise near-dups (template spam with a sliding field)
-  * builds a path graph, and a plain-propagation loop dies there.
-  * The edge relation is pre-partitioned on the join key and
-  * CACHED (an InMemoryRelation preserves its partitioning where a
-  * localCheckpoint does not), so every hop reshuffles only the (small)
-  * label relation while the big edge side stays put.
-  * Convergence rides the checkpoint action itself via observe(): labels
-  * only ever decrease, so the label SUM strictly decreases until the
-  * fixed point — two consecutive equal sums mean converged, with no
-  * separate probe job. Superseded per-round checkpoints are unpersisted
-  * so a long-lived session pins O(1) label copies, not O(rounds).
+  * Two branches, chosen from the edge count the input checkpoint
+  * observes for free:
+  *  - SMALL (edges × 32 B under the session's
+  *    `spark.sql.autoBroadcastJoinThreshold`, the bound Spark itself
+  *    uses when it collects a relation to broadcast it): the edges are
+  *    collected and union-find runs on the driver, returning a local
+  *    relation. One job instead of one materialized round per
+  *    O(log diameter) hop, and no generated classes per round.
+  *  - LARGE: a distributed min-label propagation WITH POINTER DOUBLING,
+  *    a driver-controlled loop. Each materialized round is one
+  *    propagation hop (every node adopts the minimum label among itself
+  *    and its neighbors — self-loops in the edge relation make that a
+  *    single join + min-aggregation) followed by one shortcut hop
+  *    (next(v) = label(label(v))), so label chains halve every round and
+  *    convergence takes O(log diameter) rounds, not O(diameter) — in the
+  *    family of Kiveris et al. "Connected Components in MapReduce and
+  *    Beyond" (SoCC'14) and the hash-to-min scheme of Rastogi et al.
+  *    (ICDE'13). Dedup clusters usually have tiny diameters (≤3), but a
+  *    chain of pairwise near-dups (template spam with a sliding field)
+  *    builds a path graph, and a plain-propagation loop dies there.
+  *    The edge relation is pre-partitioned on the join key and
+  *    CACHED (an InMemoryRelation preserves its partitioning where a
+  *    localCheckpoint does not), so every hop reshuffles only the (small)
+  *    label relation while the big edge side stays put.
+  *    Convergence rides the checkpoint action itself via observe(): labels
+  *    only ever decrease, so the label SUM strictly decreases until the
+  *    fixed point — two consecutive equal sums mean converged, with no
+  *    separate probe job. Superseded per-round checkpoints are unpersisted
+  *    so a long-lived session pins O(1) label copies, not O(rounds).
   *
   * Determinism: the fixed point is unique (min node id per component),
-  * so results are engine-portable — the DuckDB oracle reproduces it
-  * with a recursive reachability CTE. */
+  * so both branches give the same rows and results are engine-portable —
+  * the DuckDB oracle reproduces it with a recursive reachability CTE. */
 object Components {
 
   /** Free the block-manager storage behind a localCheckpoint'd frame once
@@ -47,19 +57,37 @@ object Components {
       case _ => ()
     }
 
+  /** `df` pinned with localCheckpoint, with its row count observed on
+    * the pin's own job. */
+  private[graft] def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val pinned = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    (pinned, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** Row size the graph family assumes when it sizes a relation against
+    * the broadcast threshold. */
+  private val bytesPerRow = 32L
+
+  /** True when `rows` rows of [[bytesPerRow]] fit under the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (-1 or 0: never). */
+  private[graft] def fitsBroadcast(spark: SparkSession, rows: Long): Boolean =
+    rows * bytesPerRow < org.apache.spark.sql.GraftSqlShims.broadcastThreshold(spark)
+
   /** edges(src, dst) — treated as undirected; self-loops and duplicates
     * are tolerated. Returns (id, component) where component = min node
-    * id reachable, one row per distinct node appearing in `edges`. */
+    * id reachable, one row per distinct node appearing in `edges`; a
+    * null endpoint joins nothing, and a null id gets a row (labelled with
+    * the min component among its neighbors) only when it has a non-null
+    * neighbor. Integral ids below the broadcast threshold take the
+    * union-find branch, everything else the propagation loop. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // checkpoint the INPUT first: the symmetrization union references the
     // edge subtree twice, and callers pass arbitrarily expensive pair
     // pipelines (e.g. the full Jaccard chain) as edges. The observe rides
-    // the checkpoint action, so the edge count used for partition sizing
-    // below is free (no extra job).
-    val eObs = org.apache.spark.sql.Observation("cc_edges")
-    val e0 = edges.select(col("src"), col("dst"))
-      .observe(eObs, count(lit(1)).as("n")).localCheckpoint()
-    val nEdges = eObs.get("n").asInstanceOf[Long]
+    // the checkpoint action, so the edge count that picks the branch and
+    // sizes the loop's partitions is free (no extra job).
+    val (e0, nEdges) = pinCounted(edges.select(col("src"), col("dst")))
     // symmetrize only — NO distinct: min-aggregation is insensitive to
     // duplicate edges, and a distinct here would shuffle the full 2E-row
     // relation once just to drop rows the partial aggregation collapses
@@ -70,11 +98,73 @@ object Components {
     // initial labels fold the FIRST propagation hop into the node-set
     // aggregation: component0(v) = min(v, neighbors(v)). One shuffle
     // (map-side partial agg) replaces the old distinct-nodes job and a
-    // whole hop of the loop.
+    // whole hop of the loop. Its (analysed, never executed) schema is
+    // also the union-find branch's output schema.
     val labels0 = symRaw
       .groupBy(col("src").as("id"))
       .agg(min(least(col("src"), col("dst"))).as("component"))
-      .localCheckpoint()
+    val integralIds = labels0.schema.fields.forall(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    if (integralIds && fitsBroadcast(e0.sparkSession, nEdges)) {
+      val labels = unionFind(e0.collect(), labels0.schema, e0.sparkSession)
+      freeCheckpoint(e0)
+      labels
+    } else propagate(e0, symRaw, labels0.localCheckpoint(), nEdges, maxIter)
+  }
+
+  /** The union-find branch: (id, component = min id of its component)
+    * over collected (src, dst) rows, as a local relation of `schema`.
+    * Rows match the propagation loop's, null endpoints included: an
+    * edge with a null end unites nothing, and the null id is labelled
+    * with the min component among its non-null neighbors. */
+  private def unionFind(edges: Array[Row], schema: StructType,
+                        spark: SparkSession): DataFrame = {
+    val index = mutable.LongMap.empty[Int]
+    val ids = mutable.ArrayBuffer.empty[Long]
+    val parent = mutable.ArrayBuffer.empty[Int]
+    def node(v: Any): Int =
+      index.getOrElseUpdate(v.asInstanceOf[Number].longValue, {
+        ids += v.asInstanceOf[Number].longValue
+        parent += parent.length
+        parent.length - 1
+      })
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    val nullNeighbors = mutable.ArrayBuffer.empty[Int]
+    edges.foreach { e =>
+      (Option(e.get(0)).map(node), Option(e.get(1)).map(node)) match {
+        case (Some(a), Some(b)) =>
+          val (ra, rb) = (find(a), find(b))
+          // the root is always its component's min id
+          if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
+        case (Some(a), None) => nullNeighbors += a
+        case (None, Some(b)) => nullNeighbors += b
+        case (None, None) => ()
+      }
+    }
+    def typed(dt: DataType)(v: Long): Any = dt match {
+      case ByteType => v.toByte
+      case ShortType => v.toShort
+      case IntegerType => v.toInt
+      case _ => v
+    }
+    val (asId, asComponent) = (typed(schema(0).dataType) _, typed(schema(1).dataType) _)
+    val rows = new java.util.ArrayList[Row](ids.length + 1)
+    ids.indices.foreach(i => rows.add(Row(asId(ids(i)), asComponent(ids(find(i))))))
+    if (nullNeighbors.nonEmpty)
+      rows.add(Row(null, asComponent(nullNeighbors.map(i => ids(find(i))).min)))
+    spark.createDataFrame(rows, schema)
+  }
+
+  /** The propagation branch over the pinned input `e0`, its symmetrized
+    * form and its pinned initial labels. */
+  private def propagate(e0: DataFrame, symRaw: DataFrame, labels0: DataFrame,
+                        nEdges: Long, maxIter: Int): DataFrame = {
     var labels = labels0
     // self-loops (v,v) — taken from the label relation, not a distinct
     // over edges — make min-over-(neighbors ∪ self) a single join per
@@ -155,108 +245,6 @@ object Components {
       throw new IllegalArgumentException(
         s"connectedComponents did not converge in $maxIter rounds")
     }
-    labels
-  }
-
-  /** Alternative formulation: alternating LARGE-STAR / SMALL-STAR edge
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14). Where `connectedComponents` keeps the EDGE
-    * relation fixed (cached, pre-partitioned) and iterates on a label
-    * relation, the star algorithm rewrites the edge relation itself each
-    * round — large-star hangs every node's larger neighbors off its
-    * neighborhood minimum, small-star re-centers the smaller neighbors —
-    * until the graph is a star forest whose centers are the component
-    * minima. The edge relation SHRINKS monotonically toward one edge per
-    * non-root node, so this wins when edges ≫ nodes (dense candidate
-    * graphs: a hot LSH bucket of k docs contributes k²/2 pairs that
-    * collapse to k−1 star edges after one round); label propagation wins
-    * when the edge relation is lean and reusable. Both converge in
-    * O(log n) rounds. Same contract as connectedComponents: (id,
-    * component = min reachable node id), one row per distinct node in
-    * `edges`; ComponentsSpec proves the two agree on randomized graphs.
-    */
-  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // checkpoint the INPUT once (the connectedComponents posture: callers
-    // pass arbitrarily expensive pair pipelines) — `nodes` and the
-    // canonical edge set below both derive from it, and two separate
-    // checkpoint actions straight off `edges` would re-execute the whole
-    // upstream pipeline twice. Nodes come from the PRE-self-loop-filter
-    // relation so isolated self-loop nodes keep their label row.
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint()
-    // canonical undirected form, self-loops dropped (re-added as labels at
-    // the end via the node set), duplicates collapsed once up front — the
-    // star rewrites below keep the relation deduplicated round to round
-    val nodes = e0
-      .select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-      .localCheckpoint()
-    var e = e0
-      .select(least(col("src"), col("dst")).as("lo"),
-        greatest(col("src"), col("dst")).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .distinct()
-      .localCheckpoint()
-    freeCheckpoint(e0)
-    var nE = e.count()
-    var iter = 0
-    var converged = nE == 0L
-    while (!converged && iter < maxIter) {
-      // LARGE-STAR: center u, m = min(neighborhood(u) ∪ {u}); every
-      // STRICTLY LARGER neighbor v > u re-attaches to m. Since m ≤ u < v
-      // the produced edge is already canonically ordered (m, v).
-      val sym = e.select(col("lo").as("u"), col("hi").as("v"))
-        .unionByName(e.select(col("hi").as("u"), col("lo").as("v")))
-      val minL = sym.groupBy("u")
-        .agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = sym.join(minL, "u")
-        .filter(col("v") > col("u"))
-        .select(col("m").as("lo"), col("v").as("hi"))
-        .filter(col("lo") =!= col("hi"))
-        .distinct()
-        .localCheckpoint() // read twice by small-star (agg + join)
-      // SMALL-STAR: direct edges large→small (every (lo,hi) points
-      // hi→lo); center u = hi, m = min of its smaller neighbors; all of
-      // them AND u itself re-attach to m.
-      val dir = large.select(col("hi").as("u"), col("lo").as("v"))
-      val minS = dir.groupBy("u").agg(min(col("v")).as("m"))
-      val small = dir.join(minS, "u")
-        .select(col("m").as("lo"), col("v").as("hi"))
-        .filter(col("lo") =!= col("hi"))
-        .unionByName(minS.select(col("m").as("lo"), col("u").as("hi")))
-        .distinct()
-        .localCheckpoint()
-      // fixed point = the edge SET is unchanged: same cardinality and no
-      // row of the new relation missing from the old (⊆ + equal count ⇒
-      // equality on deduplicated relations — an exact check, no checksum)
-      val nSmall = small.count()
-      converged = nSmall == nE &&
-        small.join(e, Seq("lo", "hi"), "left_anti").isEmpty
-      freeCheckpoint(large)
-      freeCheckpoint(e)
-      e = small
-      nE = nSmall
-      iter += 1
-    }
-    if (!converged) {
-      // release storage BEFORE throwing — a caught non-convergence in a
-      // long-lived session must not pin the node set and last edge round
-      freeCheckpoint(nodes)
-      freeCheckpoint(e)
-      throw new IllegalArgumentException(
-        s"connectedComponentsStar did not converge in $maxIter rounds")
-    }
-    // the converged relation is a star forest: (component-min, member).
-    // Non-root members appear exactly once as `hi`; roots and isolated
-    // nodes label themselves.
-    val labels = nodes
-      .join(e.select(col("hi").as("id"), col("lo").as("component")),
-        Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("component"))
-      .localCheckpoint() // materialize BEFORE freeing the frames it reads
-    freeCheckpoint(nodes)
-    freeCheckpoint(e)
     labels
   }
 }

@@ -185,7 +185,10 @@ object TextOps {
   /** LSH banding over a minhash signature: k hashes → `bands` bands of
     * k/bands rows each; docs agreeing on ANY band become candidates.
     * Banded keys make the candidate join an equi-join — the LSH scale
-    * path (no all-pairs comparison ever happens). */
+    * path (no all-pairs comparison ever happens). Returns (id, band INT,
+    * band_key), `bands` rows per signature, from ONE posexplode of the
+    * band-key array: each side of a band self-join is one projection,
+    * where a per-band union was `bands` projections. */
   def lshBands(sig: DataFrame, idCol: String, k: Int, bands: Int): DataFrame = {
     // bands must tile the signature exactly: a remainder would silently
     // change recall (ignored hashes), and bands > k would make every
@@ -194,12 +197,11 @@ object TextOps {
     require(k > 0 && bands > 0 && k % bands == 0,
       s"lshBands: bands=$bands must divide signature length k=$k > 0")
     val rowsPerBand = k / bands
-    val banded = (0 until bands).map { b =>
+    val keys = (0 until bands).map { b =>
       val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(j => col(s"h$j"))
-      sig.select(col(idCol), lit(b).as("band"),
-        concat_ws(",", cols.map(_.cast("string")): _*).as("band_key"))
+      concat_ws(",", cols.map(_.cast("string")): _*)
     }
-    banded.reduce(_ unionByName _)
+    sig.select(col(idCol), posexplode(array(keys: _*)).as(Seq("band", "band_key")))
   }
 
   // ------------------------------------------------------------------
@@ -374,12 +376,11 @@ object TextOps {
     // the prefix index and again by verification. p is relational: the
     // same ceil-with-1e-9-slack math as documented above (a double error
     // can only LENGTHEN the prefix).
-    val arrs = shingleArraysLocal(df, idCol, textCol, n)
+    val arrs = pinShingleArrays(shingleArraysLocal(df, idCol, textCol, n)
       .withColumn("p",
         greatest(lit(1),
           (size(col("sh_arr")).cast("long")
-            - ceil(lit(t - 1e-6) * size(col("sh_arr")) - lit(1e-9)) + 1L).cast("int")))
-      .localCheckpoint()
+            - ceil(lit(t - 1e-6) * size(col("sh_arr")) - lit(1e-9)) + 1L).cast("int"))))
     // The prefix theorem holds under ANY consistent global element
     // order, and the ORDER is the whole scale story: with the arrays'
     // native hash order, prefixes index a uniform sample of shingles, so
@@ -392,10 +393,10 @@ object TextOps {
     // candidate join near-linear (10× docs → 11× candidates, measured).
     // Output is UNCHANGED: prefix order affects only which superset of
     // the true pairs reaches exact verification.
-    val docFreq = arrs
+    val docFreq = arrs.df
       .select(explode(array_distinct(col("sh_arr"))).as("shingle"))
       .groupBy("shingle").agg(count(lit(1)).as("df"))
-    val prefix = arrs
+    val prefix = arrs.df
       .select(col(idCol), col("p"), explode(col("sh_arr")).as("shingle"))
       .join(docFreq, "shingle")
       .groupBy(col(idCol), col("p"))
@@ -429,8 +430,8 @@ object TextOps {
   def jaccardPairsCapped(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, maxDf: Long = 10L, minJaccard: Double = 0.8,
                          maxBroadcastDocs: Long = 100000L): DataFrame = {
-    val arrs = shingleArraysLocal(df, idCol, textCol, n).localCheckpoint()
-    val sh = arrs.select(col(idCol), explode(col("sh_arr")).as("shingle"))
+    val arrs = pinShingleArrays(shingleArraysLocal(df, idCol, textCol, n))
+    val sh = arrs.df.select(col(idCol), explode(col("sh_arr")).as("shingle"))
     val rareShingles = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("shingle")
     // checkpointed: the candidate self-join references rare twice — the
@@ -449,11 +450,12 @@ object TextOps {
     * rounded jaccard and the threshold — kept in ONE place because the
     * rounding scale is an oracle-parity constant shared by every
     * caller. */
-  def scoredPairs(cand: DataFrame, arrs: DataFrame, idCol: String,
+  def scoredPairs(cand: DataFrame, arrs: ShingleArrays, idCol: String,
                   minJaccard: Double, maxBroadcastDocs: Long = 100000L,
-                  spreadVerify: Boolean = false): DataFrame =
+                  spreadVerify: Boolean = false,
+                  candRows: Option[Long] = None): DataFrame =
     verifyCandidates(cand, arrs, idCol, maxBroadcastDocs,
-      spreadVerify = spreadVerify)
+      spreadVerify = spreadVerify, candRows = candRows)
       .withColumn("jaccard",
         round(col("inter") / (col("sz1") + col("sz2") - col("inter")), 6))
       .filter(col("jaccard") >= minJaccard)
@@ -489,6 +491,22 @@ object TextOps {
       .toDF(idCol, "sh_arr")
   }
 
+  /** A pinned (id, sh_arr, …) relation with the two totals
+    * [[verifyCandidates]] sizes its broadcast by: documents and array
+    * elements. */
+  final case class ShingleArrays(df: DataFrame, docs: Long, elems: Long)
+
+  /** Pins `arrs` with localCheckpoint; the totals ride the pin's own job
+    * through observe(), so verification needs no sizing job of its own. */
+  def pinShingleArrays(arrs: DataFrame): ShingleArrays = {
+    val obs = org.apache.spark.sql.Observation()
+    val df = arrs.observe(obs, count(lit(1)).as("docs"),
+      coalesce(sum(size(col("sh_arr")).cast("long")), lit(0L)).as("elems"))
+      .localCheckpoint()
+    ShingleArrays(df, obs.get("docs").asInstanceOf[Long],
+      obs.get("elems").asInstanceOf[Long])
+  }
+
   /** Exact sorted-merge intersection with run-product counting — the
     * precise count the inverted-index join's groupBy would produce,
     * collision-identical included. */
@@ -511,23 +529,23 @@ object TextOps {
     * (id, sh_arr) sorted-array relation. ≤ `maxBroadcastDocs`: the arrays
     * are broadcast and verification is a narrow map over the pairs;
     * above: two shuffle joins ship each pair its arrays. Both paths run
-    * `interCount`. */
-  private[graft] def verifyCandidates(cand: DataFrame, arrs: DataFrame, idCol: String,
+    * `interCount`. `candRows`, when given, says `cand` is already pinned
+    * and holds that many pairs. */
+  private[graft] def verifyCandidates(cand: DataFrame, arrs: ShingleArrays, idCol: String,
                                       maxBroadcastDocs: Long,
                                       maxBroadcastBytes: Long = 1L << 30,
-                                      spreadVerify: Boolean = false): DataFrame = {
+                                      spreadVerify: Boolean = false,
+                                      candRows: Option[Long] = None): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
     // the decision is (rows, BYTES), not rows alone: a row cap bounds
     // cardinality but not payload — 100k docs averaging 100k shingles
     // is ~80 GB "within budget" under a docs-only guard, then doubled
     // by toMap and broadcast: a driver OOM the cap existed to prevent.
-    // One cheap agg job decides; the collect runs only when BOTH fit.
-    val rel = arrs.select(col(idCol), col("sh_arr"))
-    val dec = rel.agg(count(lit(1)),
-      coalesce(sum(size(col("sh_arr")).cast("long")), lit(0L))).collect().head
-    val fits = dec.getLong(0) <= maxBroadcastDocs &&
-      dec.getLong(1) * 8L <= maxBroadcastBytes
+    // Both totals were observed when the arrays were pinned; the collect
+    // runs only when BOTH fit.
+    val rel = arrs.df.select(col(idCol), col("sh_arr"))
+    val fits = arrs.docs <= maxBroadcastDocs && arrs.elems * 8L <= maxBroadcastBytes
     val collected =
       if (!fits) Array.empty[(Long, Array[Long])]
       else rel.as[(Long, Array[Long])].collect()
@@ -542,7 +560,8 @@ object TextOps {
       // defaultParallelism(32) — lost to 32 × ~55 ms task overhead; the
       // cost model picks the partition count from the WORK instead:
       // the pair relation is pinned (one cheap barrier; pair count
-      // rides the checkpoint via observe, free) and spread over
+      // rides the checkpoint via observe, free — or the caller's own
+      // pin already counted it) and spread over
       // work / stepsPerTask (3M merge-steps per task), capped at
       // defaultParallelism. Small candidate sets compute p = 1 and pay
       // only the pin; opt-in (spreadVerify) so row-trivial callers
@@ -550,13 +569,11 @@ object TextOps {
       val candSrc =
         if (!spreadVerify) cand
         else {
-          val obs = org.apache.spark.sql.Observation()
-          val pinned = cand
-            .observe(obs, count(lit(1)).as("n")).localCheckpoint()
-          val nPairs = Option(obs.get("n"))
-            .map(_.asInstanceOf[Long]).getOrElse(0L)
-          val avgLen =
-            if (dec.getLong(0) > 0L) dec.getLong(1) / dec.getLong(0) else 0L
+          val (pinned, nPairs) = candRows match {
+            case Some(n) => (cand, n)
+            case None => Components.pinCounted(cand)
+          }
+          val avgLen = if (arrs.docs > 0L) arrs.elems / arrs.docs else 0L
           val work = nPairs * 2L * math.max(avgLen, 1L)
           val stepsPerTask = 3000000L
           val p = math.max(1L, math.min(
@@ -579,8 +596,8 @@ object TextOps {
       }.toDF("id1", "id2", "inter", "sz1", "sz2")
     } else {
       cand
-        .join(arrs.select(col(idCol).as("id1"), col("sh_arr").as("arr1")), "id1")
-        .join(arrs.select(col(idCol).as("id2"), col("sh_arr").as("arr2")), "id2")
+        .join(rel.select(col(idCol).as("id1"), col("sh_arr").as("arr1")), "id1")
+        .join(rel.select(col(idCol).as("id2"), col("sh_arr").as("arr2")), "id2")
         .select(col("id1"), col("id2"), col("arr1"), col("arr2"))
         .as[(Long, Long, Array[Long], Array[Long])]
         .mapPartitions { it =>

@@ -2,9 +2,10 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.{Components, TextOps}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Round-4 surface growth: the operator families a production lakehouse
   * pipeline leans on that earlier rounds had not yet pinned —
@@ -100,6 +101,138 @@ object AdvancedQueries extends QueryRegistry {
     }
     require(converged, s"pointerDoubleRollup did not converge in $iter rounds")
     state
+  }
+
+  /** q_pagerank's directed edge relation: every pinned (a, b) pair in
+    * both directions, from ONE scan of the pairs (the union-of-two-selects
+    * formulation read the pairs twice). */
+  private def bothDirections(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** q_pagerank under the broadcast threshold: the five iterations over
+    * the collected (a, b) pairs, on the driver. Same node set, degrees,
+    * damping, iteration count and rows as [[distributedPageRank]],
+    * nulls included (a null node counts in n and receives rank but
+    * passes none on, as it joins nothing); returns a local relation of
+    * (node, round(rank, 8)). Frees `pairs`. */
+  private def localPageRank(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    // the loop's node type: both ends widened to one type by the explode
+    val nodeType = bothDirections(pairs).schema("src").dataType
+    val rows = pairs.select(col("a").cast(nodeType), col("b").cast(nodeType)).collect()
+    Components.freeCheckpoint(pairs)
+    val index = scala.collection.mutable.HashMap.empty[Any, Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def node(v: Any): Int = index.getOrElseUpdate(v, { ids += v; ids.length - 1 })
+    val (src, dst) = (new Array[Int](2 * rows.length), new Array[Int](2 * rows.length))
+    rows.indices.foreach { i =>
+      val (a, b) = (node(rows(i).get(0)), node(rows(i).get(1)))
+      src(2 * i) = a; dst(2 * i) = b
+      src(2 * i + 1) = b; dst(2 * i + 1) = a
+    }
+    val deg = new Array[Long](ids.length)
+    src.foreach(s => deg(s) += 1)
+    val nullNode = index.getOrElse(null, -1)
+    val n = ids.length.toDouble
+    var rank = Array.fill(ids.length)(1.0 / n)
+    var ranked = Array.fill(ids.length)(true)
+    for (_ <- 1 to 5) {
+      val sum = new Array[Double](ids.length)
+      val reached = new Array[Boolean](ids.length)
+      for (k <- src.indices) {
+        val s = src(k)
+        if (ranked(s) && s != nullNode) {
+          sum(dst(k)) += rank(s) / deg(s)
+          reached(dst(k)) = true
+        }
+      }
+      rank = sum.map(x => 0.15 / n + 0.85 * x)
+      ranked = reached
+    }
+    val out = new java.util.ArrayList[Row]()
+    ids.indices.filter(ranked).foreach(i => out.add(Row(ids(i), rank(i))))
+    spark.createDataFrame(out,
+        StructType(Seq(StructField("node", nodeType), StructField("rank", DoubleType))))
+      .select(col("node"), round(col("rank"), 8).as("rank"))
+  }
+
+  /** q_pagerank above the broadcast threshold: five iterations as a
+    * distributed loop over the pinned (a, b) pairs; returns the pinned
+    * (node, round(rank, 8)) relation. Frees `pairs`. */
+  private def distributedPageRank(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    // degree attached by an UNORDERED window over src (one exchange; a
+    // groupBy+join formulation costs three for the identical relation).
+    //
+    // The relation is pinned with localCheckpoint, NOT cache (r14
+    // opt): all five iterations re-scan it, and the columnar
+    // InMemoryRelation paid decompression + ColumnarToRow on every
+    // scan through a FRESH codegen class per iteration — measured
+    // 6.5–9.1 s executorRunTime per iteration-scan against 0.3–0.7 s
+    // for the same scan over checkpoint-pinned UnsafeRows (eager scans
+    // of the cached vs the checkpointed relation, sf0.1). The cache's one advantage
+    // — preserving the src hash-partitioning — buys nothing here:
+    // the per-round join broadcasts the (1 row/node) rank relation,
+    // so the edge side is never shuffled either way, and the
+    // groupBy(dst) reduction needs its own exchange regardless.
+    val edges = bothDirections(pairs)
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
+      .localCheckpoint()
+    Components.freeCheckpoint(pairs)
+    val nodes = edges.select(col("src")).distinct()
+    val n = nodes.count().toDouble
+    // the five iterations stay LAZY — one deep plan where each round
+    // is a join against the pinned edges plus a group-sum of the
+    // (1 row/node) rank relation, executed as one AQE job. Round 5
+    // measured the alternative (eager localCheckpoint per round) at
+    // 7-32s on identical code: five driver-synchronized barrier jobs
+    // amplify every GC pause / shared-VM hiccup into the query time.
+    // One lazy job has one scheduling boundary, and only the FINAL
+    // (small) rank relation is materialized — after which the
+    // checkpoint can be freed before the caller consumes the result.
+    //
+    // SIZE-AWARE broadcast hint (r14): a checkpointed LogicalRDD has
+    // no stats, so the INITIAL plan estimates the rank side huge and
+    // plans shuffle joins; AQE converts them to broadcast at runtime
+    // but only after the edge exchanges are already materialized —
+    // StageProfile showed two full 108 MB checkpoint re-scans
+    // shuffle-writing 1.17M rows that a statically-planned broadcast
+    // join never performs. We KNOW the rank cardinality exactly (n,
+    // one row per node), so hint broadcast iff n × 32 B clears the
+    // session's own broadcast threshold — at a node count too big to
+    // broadcast the hint vanishes and the planner's shuffle join
+    // stands, so no OOM is forced at scale.
+    val rankBroadcasts = Components.fitsBroadcast(spark, n.toLong)
+    def rankSide(df: DataFrame) = if (rankBroadcasts) broadcast(df) else df
+    // ABOVE-THRESHOLD posture (r15, VERDICT r14 #2-wrong): when the
+    // rank relation cannot broadcast, the per-round join would
+    // reshuffle the full 2E-row checkpoint every iteration (the shape
+    // the old dst-partitioned cache existed to prevent). In that
+    // regime the loop reads a src-partitioned columnar cache instead:
+    // one extra edge shuffle up front, then every round moves only
+    // the n-row rank relation. The cache's decompression-per-scan
+    // cost (r14 lesson 1) is accepted here — it is per-round CPU,
+    // small against the per-round 2E-row network reshuffle it
+    // replaces. sf1 A/B with the threshold forced to 1 KB (hint
+    // cannot fire): shipped form 5.80 s, partitioned pin 5.54 s warm.
+    val loopEdges =
+      if (rankBroadcasts) edges
+      else edges.repartition(col("src")).cache()
+    var pr = nodes.select(col("src").as("node"), lit(1.0 / n).as("rank"))
+    for (_ <- 1 to 5) {
+      pr = loopEdges
+        .join(rankSide(pr), loopEdges("src") === pr("node"))
+        .groupBy(col("dst").as("node"))
+        .agg((lit(0.15 / n) + lit(0.85) * sum(col("rank") / col("deg"))).as("rank"))
+    }
+    val out = pr.select(col("node"), round(col("rank"), 8).as("rank"))
+      .localCheckpoint()
+    if (loopEdges ne edges) loopEdges.unpersist(false)
+    Components.freeCheckpoint(edges)
+    out
   }
 
   /** Graph metrics over canonically-oriented (u < v) edges: node count,
@@ -450,104 +583,33 @@ object AdvancedQueries extends QueryRegistry {
   // ---- PageRank, 5 fixed iterations (damping 0.85) over the
   // supplier↔customer trade graph (distinct lineitem⋈orders pairs,
   // symmetrized; suppliers offset by 1e6 into a shared id space). The
-  // canonical iterative-relational workload: each iteration is one
-  // edge⋈rank join + one group-sum — the edge relation is checkpointed
-  // ONCE and reused by all five iterations (only the small rank
-  // relation moves per round, the Components.connectedComponents
-  // posture), and the fixed iteration count makes the result an exact
-  // relational fixed point the oracle replays with a recursive CTE.
+  // canonical iterative-relational workload; the fixed iteration count
+  // makes the result an exact relational fixed point the oracle replays
+  // with a recursive CTE. The distinct pairs are pinned ONCE, their
+  // count observed on the pin, and that count picks the engine:
+  //  - under the broadcast threshold (pairs × 32 B, the graph family's
+  //    row estimate; Components.fitsBroadcast) the pairs are collected
+  //    and the five iterations run on the driver (localPageRank), with
+  //    degrees counted in the same pass — a local relation comes back,
+  //    and the query runs no per-round jobs or generated classes;
+  //  - above it, the distributed loop (distributedPageRank): each
+  //    iteration is one edge⋈rank join + one group-sum over an edge
+  //    relation pinned once and reused by all five iterations (only the
+  //    small rank relation moves per round, the
+  //    Components.connectedComponents posture).
   // Per-node incoming sums are order-unspecified in both engines →
   // round(8) on ranks ~1e-3 absorbs the ~1e-15 reassociation drift.
   private val pagerank = NamedQuery(
     "q_pagerank",
     (spark, d) => {
-      // One pass builds the whole iteration-invariant edge relation:
-      // lineitem⋈orders → distinct directed pairs → SYMMETRIZE VIA
-      // EXPLODE (each row emits both directions in one scan — the
-      // union-of-two-selects formulation read the distinct subtree
-      // twice and needed its own checkpoint to avoid recomputing the
-      // join, r14 opt: two pinned relations → one) → degree attached by
-      // an UNORDERED window over src (one exchange; a groupBy+join
-      // formulation costs three for the identical relation).
-      //
-      // The relation is pinned with localCheckpoint, NOT cache (r14
-      // opt): all five iterations re-scan it, and the columnar
-      // InMemoryRelation paid decompression + ColumnarToRow on every
-      // scan through a FRESH codegen class per iteration — measured
-      // 6.5–9.1 s executorRunTime per iteration-scan against 0.3–0.7 s
-      // for the same scan over checkpoint-pinned UnsafeRows (eager scans
-      // of the cached vs the checkpointed relation, sf0.1). The cache's one advantage
-      // — preserving the src hash-partitioning — buys nothing here:
-      // the per-round join broadcasts the (1 row/node) rank relation,
-      // so the edge side is never shuffled either way, and the
-      // groupBy(dst) reduction needs its own exchange regardless.
-      val edges = Tables.lineitem(spark, d)
+      val (pairs, nPairs) = Components.pinCounted(Tables.lineitem(spark, d)
         .join(Tables.orders(spark, d), col("l_orderkey") === col("o_orderkey"))
         .select((col("l_suppkey") + 1000000L).as("a"), col("o_custkey").as("b"))
-        .distinct()
-        .select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
-        .localCheckpoint()
-      val nodes = edges.select(col("src")).distinct()
-      val n = nodes.count().toDouble
-      // the five iterations stay LAZY — one deep plan where each round
-      // is a join against the pinned edges plus a group-sum of the
-      // (1 row/node) rank relation, executed as one AQE job. Round 5
-      // measured the alternative (eager localCheckpoint per round) at
-      // 7-32s on identical code: five driver-synchronized barrier jobs
-      // amplify every GC pause / shared-VM hiccup into the query time.
-      // One lazy job has one scheduling boundary, and only the FINAL
-      // (small) rank relation is materialized — after which the
-      // checkpoint can be freed before the caller consumes the result.
-      //
-      // SIZE-AWARE broadcast hint (r14): a checkpointed LogicalRDD has
-      // no stats, so the INITIAL plan estimates the rank side huge and
-      // plans shuffle joins; AQE converts them to broadcast at runtime
-      // but only after the edge exchanges are already materialized —
-      // StageProfile showed two full 108 MB checkpoint re-scans
-      // shuffle-writing 1.17M rows that a statically-planned broadcast
-      // join never performs. We KNOW the rank cardinality exactly (n,
-      // one row per node), so hint broadcast iff n × 32 B clears the
-      // session's own broadcast threshold — at a node count too big to
-      // broadcast the hint vanishes and the planner's shuffle join
-      // stands, so no OOM is forced at scale.
-      val bcThresh = try org.apache.spark.network.util.JavaUtils
-        .byteStringAsBytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-      catch { case _: Throwable => 10L << 20 }
-      val rankBroadcasts = n * 32 < bcThresh
-      def rankSide(df: org.apache.spark.sql.DataFrame) =
-        if (rankBroadcasts) broadcast(df) else df
-      // ABOVE-THRESHOLD posture (r15, VERDICT r14 #2-wrong): when the
-      // rank relation cannot broadcast, the per-round join would
-      // reshuffle the full 2E-row checkpoint every iteration (the shape
-      // the old dst-partitioned cache existed to prevent). In that
-      // regime the loop reads a src-partitioned columnar cache instead:
-      // one extra edge shuffle up front, then every round moves only
-      // the n-row rank relation. The cache's decompression-per-scan
-      // cost (r14 lesson 1) is accepted here — it is per-round CPU,
-      // small against the per-round 2E-row network reshuffle it
-      // replaces. sf1 A/B with the threshold forced to 1 KB (hint
-      // cannot fire): shipped form 5.80 s, partitioned pin 5.54 s warm;
-      // at the default threshold the hint regime stays (5.0 s) and this
-      // branch never runs locally, so plans/budgets are unchanged.
-      val loopEdges =
-        if (rankBroadcasts) edges
-        else edges.repartition(col("src")).cache()
-      var pr = nodes.select(col("src").as("node"), lit(1.0 / n).as("rank"))
-      for (_ <- 1 to 5) {
-        pr = loopEdges
-          .join(rankSide(pr), loopEdges("src") === pr("node"))
-          .groupBy(col("dst").as("node"))
-          .agg((lit(0.15 / n) + lit(0.85) * sum(col("rank") / col("deg"))).as("rank"))
-      }
-      val out = pr.select(col("node"), round(col("rank"), 8).as("rank"))
-        .localCheckpoint()
-      if (loopEdges ne edges) loopEdges.unpersist(false)
-      Components.freeCheckpoint(edges)
-      out.orderBy("node")
+        .distinct())
+      val ranks =
+        if (Components.fitsBroadcast(spark, nPairs)) localPageRank(pairs)
+        else distributedPageRank(pairs)
+      ranks.orderBy("node")
     },
     Some("""WITH RECURSIVE
         |edges AS (

@@ -185,8 +185,8 @@ object DedupQueries extends QueryRegistry {
     * verification. Shared by [[minhashVerifiedPairs]] (which verifies
     * them) and dedup_minhash_recall (which measures them against exact
     * ground truth). Signatures are row-local (one narrow map, no corpus
-    * shingle explode) and checkpointed because the 4-way band union
-    * self-joins the relation 8×. */
+    * shingle explode) and checkpointed because both sides of the band
+    * self-join read them. */
   private def bandCandidates(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sig = TextOps.minhashSignaturesLocal(docs, "doc_id", "text", 3, minhashK)
@@ -204,16 +204,17 @@ object DedupQueries extends QueryRegistry {
       spark: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(spark, d)
-    val cand = bandCandidates(docs)
-      // candDocs (→ arrs) and scoredPairs both consume the candidates:
-      // pin them, or the 8-way band join + distinct run twice
-      .localCheckpoint()
+    // candDocs (→ arrs) and scoredPairs both consume the candidates:
+    // pin them, or the band join + distinct run twice; the pair count
+    // the verify spread needs rides the same pin
+    val (cand, nCand) = Components.pinCounted(bandCandidates(docs))
     val candDocs = cand.select(col("id1").as("doc_id"))
       .union(cand.select(col("id2"))).distinct()
-    val arrs = TextOps.shingleArraysLocal(
+    val arrs = TextOps.pinShingleArrays(TextOps.shingleArraysLocal(
       docs.join(candDocs, "doc_id").select(col("doc_id"), col("text")),
-      "doc_id", "text", 3).localCheckpoint()
-    TextOps.scoredPairs(cand, arrs, "doc_id", 0.8, spreadVerify = true)
+      "doc_id", "text", 3))
+    TextOps.scoredPairs(cand, arrs, "doc_id", 0.8, spreadVerify = true,
+      candRows = Some(nCand))
   }
 
   /** DuckDB dual of minhashVerifiedPairs, up to a `pairs(id1, id2,
@@ -625,7 +626,8 @@ object DedupQueries extends QueryRegistry {
       val cand = bandCandidates(corpus)
       val planted = base.select(col("doc_id").as("id1"),
         (col("doc_id") + 10000000L).as("id2"))
-      val arrs = TextOps.shingleArraysLocal(corpus, "doc_id", "text", 3)
+      val arrs = TextOps.pinShingleArrays(
+        TextOps.shingleArraysLocal(corpus, "doc_id", "text", 3))
       val truth = TextOps.scoredPairs(planted, arrs, "doc_id", 0.0)
         .select(col("id1"), col("id2"), col("jaccard"))
       truth.join(cand.withColumn("caught", lit(1L)), Seq("id1", "id2"), "left")

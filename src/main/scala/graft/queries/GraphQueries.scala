@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.Components
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -72,17 +73,9 @@ object GraphQueries extends QueryRegistry {
     // no extra job), and the hint fires only while that count × 32 B
     // clears the session's own broadcast threshold: a frontier too big
     // to broadcast keeps the planner's shuffle join, no forced OOM.
-    val bcThresh = try org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(e.sparkSession.conf
-        .get("spark.sql.autoBroadcastJoinThreshold"))
-    catch { case _: Throwable => 10L << 20 }
-    val obs0 = org.apache.spark.sql.Observation("bfs_dist_0")
-    var dist = edges.select(col("src").as("node")).distinct()
+    var (dist, nDist) = Components.pinCounted(edges.select(col("src").as("node")).distinct()
       .filter(pmod(col("node"), lit(srcMod)) === 0)
-      .select(col("node"), lit(0L).as("dist"))
-      .observe(obs0, count(lit(1)).as("n"))
-      .localCheckpoint()
-    var nDist = obs0.get("n").asInstanceOf[Long]
+      .select(col("node"), lit(0L).as("dist")))
     // ABOVE-THRESHOLD posture (r15, VERDICT r14 #2-wrong): when even the
     // INITIAL frontier cannot broadcast, every round's expansion join
     // would reshuffle the full 2E-row edge checkpoint (frontiers only
@@ -95,28 +88,27 @@ object GraphQueries extends QueryRegistry {
     // stops firing for the remaining rounds; the pin decision is made
     // once, from the source-set size, with no extra job.
     val loopEdges =
-      if (nDist * 32 < bcThresh) edges
+      if (Components.fitsBroadcast(e.sparkSession, nDist)) edges
       else edges.repartition(col("src")).cache()
-    for (r <- 1 to rounds) {
-      val obs = org.apache.spark.sql.Observation(s"bfs_dist_$r")
-      val distSide = if (nDist * 32 < bcThresh) broadcast(dist) else dist
-      val next = distSide.join(loopEdges, dist("node") === loopEdges("src"))
-        .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
-        .unionByName(dist)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      graft.ops.Components.freeCheckpoint(dist)
+    for (_ <- 1 to rounds) {
+      val distSide =
+        if (Components.fitsBroadcast(e.sparkSession, nDist)) broadcast(dist) else dist
+      val (next, n) = Components.pinCounted(
+        distSide.join(loopEdges, dist("node") === loopEdges("src"))
+          .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
+          .unionByName(dist)
+          .groupBy("node").agg(min("dist").as("dist")))
+      Components.freeCheckpoint(dist)
       dist = next
-      nDist = obs.get("n").asInstanceOf[Long]
+      nDist = n
     }
     val out = dist.groupBy("dist")
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("dist")
       .localCheckpoint()
-    graft.ops.Components.freeCheckpoint(dist)
+    Components.freeCheckpoint(dist)
     if (loopEdges ne edges) loopEdges.unpersist(false)
-    graft.ops.Components.freeCheckpoint(edges)
+    Components.freeCheckpoint(edges)
     out
   }
 

@@ -17,6 +17,11 @@ object GraftSqlShims {
   def expr(spark: SparkSession, c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     spark.asInstanceOf[classic.SparkSession].expression(c)
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, read
+    * as Spark's planner reads it (a negative value disables broadcast). */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
   /** Session-less bridges for PURE Column helpers (e.g. TextOps.md5Long)
     * that wrap a custom Expression around an arbitrary caller Column:
     * `exprOf` wraps the Column's node lazily (ColumnNodeExpression) and

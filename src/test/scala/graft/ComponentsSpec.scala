@@ -1,138 +1,168 @@
 package graft
 
 import graft.ops.Components
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Distributed connected components: the pair→cluster stage of the
-  * dedup family. Fixed point is min-reachable-id per component, so
-  * expectations are exact. */
+/** Connected components: the pair→cluster stage of the dedup family.
+  * Fixed point is min-reachable-id per component, so expectations are
+  * exact. Every test runs on both branches: the default session (small
+  * graphs take union-find) and a session with the broadcast threshold
+  * off, which takes the distributed propagation loop. */
 class ComponentsSpec extends SparkSpec {
-  import spark.implicits._
 
-  private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Components.connectedComponents(edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  test("chains, triangles, singleton edges, and multi-component graphs") {
-    // chain 1-2-3-4 (diameter > 1 forces multiple rounds), triangle
-    // 10-11-12, isolated pair 20-21, self-loop 30
-    val got = cc(Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 10L -> 11L, 11L -> 12L,
-      10L -> 12L, 20L -> 21L, 30L -> 30L))
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L))
+  /** Same SparkContext, its own conf: nothing fits under the threshold. */
+  private lazy val loopSession: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
   }
 
-  test("long path converges to one component (propagation over diameter)") {
-    val n = 12L
-    val got = cc((1L until n).map(i => i -> (i + 1)))
-    assert(got === (1L to n).map(_ -> 1L).toMap)
-  }
+  private val branches: Seq[(String, () => SparkSession)] =
+    Seq("" -> (() => spark), " (distributed loop)" -> (() => loopSession))
 
-  test("pointer doubling: a 300-node path converges within the round budget") {
-    // diameter 299 — plain 2-hop propagation needs 150 materialized
-    // rounds and died at maxIter; pointer doubling closes it in O(log d)
-    val n = 300L
-    val got = cc((0L until n - 1).map(i => i -> (i + 1)))
-    assert(got.size == n && got.values.forall(_ == 0L))
-  }
+  for ((suffix, session) <- branches) {
+    def edgesOf(edges: Seq[(Long, Long)]): DataFrame = {
+      val s = session()
+      import s.implicits._
+      edges.toDF("src", "dst")
+    }
 
-  test("edge direction does not matter") {
-    assert(cc(Seq(5L -> 3L, 3L -> 9L)) === Map(3L -> 3L, 5L -> 3L, 9L -> 3L))
-  }
+    def cc(edges: Seq[(Long, Long)]): Map[Long, Long] =
+      Components.connectedComponents(edgesOf(edges))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("empty edge list yields empty labels (no NPE from the observed metric)") {
-    assert(cc(Seq.empty) === Map.empty)
-  }
+    test("chains, triangles, singleton edges, and multi-component graphs" + suffix) {
+      // chain 1-2-3-4 (diameter > 1 forces multiple rounds), triangle
+      // 10-11-12, isolated pair 20-21, self-loop 30
+      val got = cc(Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 10L -> 11L, 11L -> 12L,
+        10L -> 12L, 20L -> 21L, 30L -> 30L))
+      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L))
+    }
 
-  test("randomized graphs match a union-find oracle") {
-    val rnd = new scala.util.Random(42)
-    for (trial <- 1 to 5) {
-      val nNodes = 30 + rnd.nextInt(40)
-      val nEdges = rnd.nextInt(60)
-      val edges = Seq.fill(nEdges)(
-        (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong))
-      if (edges.nonEmpty) {
-        // driver-side union-find oracle (test-only)
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
+    test("long path converges to one component (propagation over diameter)" + suffix) {
+      val n = 12L
+      val got = cc((1L until n).map(i => i -> (i + 1)))
+      assert(got === (1L to n).map(_ -> 1L).toMap)
+    }
+
+    test("pointer doubling: a 300-node path converges within the round budget" + suffix) {
+      // diameter 299 — plain 2-hop propagation needs 150 materialized
+      // rounds and died at maxIter; pointer doubling closes it in O(log d)
+      val n = 300L
+      val got = cc((0L until n - 1).map(i => i -> (i + 1)))
+      assert(got.size == n && got.values.forall(_ == 0L))
+    }
+
+    test("edge direction does not matter" + suffix) {
+      assert(cc(Seq(5L -> 3L, 3L -> 9L)) === Map(3L -> 3L, 5L -> 3L, 9L -> 3L))
+    }
+
+    test("empty edge list yields empty labels (no NPE from the observed metric)" + suffix) {
+      assert(cc(Seq.empty) === Map.empty)
+    }
+
+    test("randomized graphs match a union-find oracle" + suffix) {
+      val rnd = new scala.util.Random(42)
+      for (trial <- 1 to 5) {
+        val nNodes = 30 + rnd.nextInt(40)
+        val nEdges = rnd.nextInt(60)
+        val edges = Seq.fill(nEdges)(
+          (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong))
+        if (edges.nonEmpty) {
+          // driver-side union-find oracle (test-only)
+          val parent = scala.collection.mutable.Map.empty[Long, Long]
+          def find(x: Long): Long = {
+            val p = parent.getOrElseUpdate(x, x)
+            if (p == x) x else { val r = find(p); parent(x) = r; r }
+          }
+          edges.foreach { case (a, b) =>
+            val (ra, rb) = (find(a), find(b))
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          }
+          val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+          // canonical label = min member id per component
+          val byRoot = nodes.groupBy(find)
+          val expected = byRoot.values.flatMap { members =>
+            val m = members.min
+            members.map(_ -> m)
+          }.toMap
+          assert(cc(edges) === expected, s"trial $trial ($nNodes nodes, $nEdges edges)")
         }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        // canonical label = min member id per component
-        val byRoot = nodes.groupBy(find)
-        val expected = byRoot.values.flatMap { members =>
-          val m = members.min
-          members.map(_ -> m)
-        }.toMap
-        assert(cc(edges) === expected, s"trial $trial ($nNodes nodes, $nEdges edges)")
       }
     }
-  }
 
-  test("superseded per-round checkpoints are unpersisted (bounded storage)") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    // diameter 7 → several rounds, each with its own localCheckpoint
-    val labels = Components.connectedComponents(
-      (1L until 8L).map(i => i -> (i + 1)).toDF("src", "dst"))
-    labels.count()
-    val added = sc.getPersistentRDDs.keySet -- before
-    // only the FINAL labels checkpoint may remain pinned — the input,
-    // symmetrized edges, and every superseded round must be freed
-    assert(added.size <= 1, s"leaked ${added.size} persisted RDDs")
-    // and the surviving frame is still readable after the frees
-    assert(labels.count() === 8L)
-  }
-
-  private def ccStar(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Components.connectedComponentsStar(edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  test("star contraction: fixed shapes match label propagation") {
-    val shapes = Seq(
-      Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 10L -> 11L, 11L -> 12L,
-        10L -> 12L, 20L -> 21L, 30L -> 30L),
-      (1L until 12L).map(i => i -> (i + 1)),
-      Seq(5L -> 3L, 3L -> 9L),
-      Seq.empty[(Long, Long)])
-    shapes.foreach(s => assert(ccStar(s) === cc(s), s"shape $s"))
-  }
-
-  test("star contraction: dense blocks and random graphs agree with the propagation algorithm") {
-    val rnd = new scala.util.Random(7)
-    for (trial <- 1 to 3) {
-      // a dense clique-ish block (the hot-LSH-bucket shape the star
-      // algorithm exists for) plus random sparse edges
-      val clique = for {
-        i <- 0 until 8; j <- i + 1 until 8 if rnd.nextDouble() < 0.8
-      } yield (i.toLong, j.toLong)
-      val sparse = Seq.fill(30)(
-        (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-      val edges = clique ++ sparse
-      assert(ccStar(edges) === cc(edges), s"trial $trial")
+    test("superseded per-round checkpoints are unpersisted (bounded storage)" + suffix) {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      // diameter 7 → several rounds, each with its own localCheckpoint
+      val labels = Components.connectedComponents(
+        edgesOf((1L until 8L).map(i => i -> (i + 1))))
+      labels.count()
+      val added = sc.getPersistentRDDs.keySet -- before
+      // only the FINAL labels checkpoint may remain pinned — the input,
+      // symmetrized edges, and every superseded round must be freed
+      assert(added.size <= 1, s"leaked ${added.size} persisted RDDs")
+      // and the surviving frame is still readable after the frees
+      assert(labels.count() === 8L)
     }
   }
 
-  test("star contraction: non-convergence releases its checkpoints before throwing") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    intercept[IllegalArgumentException] {
-      // maxIter=0 with a non-empty graph: the loop never runs, converged
-      // stays false, and the error path must free nodes + canonical edges
-      Components.connectedComponentsStar(
-        Seq(1L -> 2L, 2L -> 3L).toDF("src", "dst"), maxIter = 0)
+  /** Rows and schema of both branches over the same edges. */
+  private def bothBranches(build: SparkSession => DataFrame): Seq[(Set[Row], String)] =
+    Seq(spark, loopSession).map { s =>
+      val out = Components.connectedComponents(build(s))
+      (out.collect().toSet, out.schema.map(_.dataType.simpleString).mkString(","))
     }
-    assert(sc.getPersistentRDDs.keySet -- before === Set.empty,
-      "non-convergence leaked persisted blocks")
+
+  test("the default threshold takes union-find, a disabled one the loop") {
+    def plan(s: SparkSession) = {
+      import s.implicits._
+      Components.connectedComponents(Seq(1L -> 2L, 2L -> 3L).toDF("src", "dst"))
+        .queryExecution.analyzed
+    }
+    assert(plan(spark).collectFirst { case r: LocalRelation => r }.isDefined)
+    assert(plan(loopSession).collectFirst { case r: LogicalRDD => r }.isDefined)
   }
 
-  test("star contraction: 120-node path converges within the round budget") {
-    val got = ccStar((0L until 119L).map(i => i -> (i + 1)))
-    assert(got.size == 120 && got.values.forall(_ == 0L))
+  test("INT ids stay INT and label the same on both branches") {
+    val Seq(small, loop) = bothBranches { s =>
+      import s.implicits._
+      Seq(3 -> 1, 1 -> 2, 7 -> 8).toDF("src", "dst")
+    }
+    assert(small === loop)
+    assert(small._2 === "int,int")
+    assert(small._1 === Set(Row(1, 1), Row(2, 1), Row(3, 1), Row(7, 7), Row(8, 7)))
+  }
+
+  test("a null endpoint unites nothing; the null id takes its neighbors' min label") {
+    val Seq(small, loop) = bothBranches { s =>
+      import s.implicits._
+      Seq(Some(1L) -> Some(2L), None -> Some(4L), Some(4L) -> Some(3L),
+        Some(5L) -> None, (None: Option[Long]) -> (None: Option[Long]))
+        .toDF("src", "dst")
+    }
+    assert(small === loop)
+    assert(small._1 === Set(Row(1L, 1L), Row(2L, 1L), Row(3L, 3L), Row(4L, 3L),
+      Row(5L, 5L), Row(null, 3L)))
+    // an all-null edge list labels nothing
+    val Seq(nullOnly, nullOnlyLoop) = bothBranches { s =>
+      import s.implicits._
+      Seq((None: Option[Long]) -> (None: Option[Long])).toDF("src", "dst")
+    }
+    assert(nullOnly === nullOnlyLoop)
+    assert(nullOnly._1.isEmpty)
+  }
+
+  test("duplicate edges and self-loops label the same on both branches") {
+    val Seq(small, loop) = bothBranches { s =>
+      import s.implicits._
+      Seq(2L -> 1L, 1L -> 2L, 2L -> 1L, 1L -> 1L, 9L -> 9L, 9L -> 9L, 3L -> 2L, 3L -> 3L)
+        .toDF("src", "dst")
+    }
+    assert(small === loop)
+    assert(small._1 === Set(Row(1L, 1L), Row(2L, 1L), Row(3L, 1L), Row(9L, 9L)))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.GraphQueries
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** Hand-computed fixtures for the round-14 graph kernels
   * (queries/GraphQueries.scala). The registry queries run these kernels
@@ -79,8 +80,10 @@ class GraphOpsSpec extends SparkSpec {
   test("above-broadcast-threshold posture: q_pagerank / q_bfs_hops return " +
       "identical results when the rank/frontier side cannot broadcast") {
     // VERDICT r14 #2-wrong: with the threshold forced below any relation,
-    // the size-aware hint cannot fire and the kernels switch to the
-    // src-partitioned cached edge pin. Results must match (see below).
+    // q_pagerank takes its distributed loop, the size-aware hint cannot
+    // fire and the kernels switch to the src-partitioned cached edge pin.
+    // Results must match the default session's, where q_pagerank runs
+    // its local branch (see below).
     // An isolated newSession keeps the shared session's conf untouched
     // (suites run concurrently on one session).
     val s2 = spark.newSession()
@@ -99,6 +102,24 @@ class GraphOpsSpec extends SparkSpec {
       assert(byKey.size === rows.length, s"$q: non-double columns do not key the rows")
       byKey
     }
+    // at the default threshold q_pagerank's pairs fit: the five
+    // iterations run on the driver and return a local relation, in fewer
+    // jobs than the loop the 1 KB session takes
+    def pagerankRun(s: org.apache.spark.sql.SparkSession, tag: String) = {
+      val metrics = QueryMetrics.register(spark.sparkContext)
+      try {
+        val plan = metrics.measure(tag) {
+          val df = SparkEntry.queries("q_pagerank")(s, dir)
+          df.collect()
+          df.queryExecution.analyzed
+        }
+        (plan.collectFirst { case r: LocalRelation => r }.isDefined, metrics.jobs(tag))
+      } finally metrics.close()
+    }
+    val (smallLocal, smallJobs) = pagerankRun(spark, "pagerank-default")
+    val (loopLocal, loopJobs) = pagerankRun(s2, "pagerank-1KB")
+    assert(smallLocal && !loopLocal, "q_pagerank took the wrong branch")
+    assert(smallJobs < loopJobs, s"local branch ran $smallJobs jobs, the loop $loopJobs")
     for (q <- Seq("q_pagerank", "q_bfs_hops")) {
       val want = keyed(spark, q)
       val got = keyed(s2, q)

@@ -155,6 +155,26 @@ class PropertiesSpec extends SparkSpec {
     assert(!plan.contains("Exchange"))
   }
 
+  test("lshBands: one posexplode gives the per-band union's rows and types on real docs") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+      .select(col("doc_id"), col("text"))
+    val sig = TextOps.minhashSignaturesLocal(docs, "doc_id", "text", 3, 16)
+      .localCheckpoint()
+    // the former formulation: one projection per band, unioned
+    val union = (0 until 4).map { b =>
+      sig.select(col("doc_id"), lit(b).as("band"),
+        concat_ws(",", (b * 4 until b * 4 + 4).map(j => col(s"h$j").cast("string")): _*)
+          .as("band_key"))
+    }.reduce(_ unionByName _)
+    val got = TextOps.lshBands(sig, "doc_id", 16, 4)
+    assert(got.schema === union.schema)
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.collect().groupBy(identity).view.mapValues(_.length).toMap
+    val want = multiset(union)
+    assert(want.values.sum === 4 * sig.count())
+    assert(multiset(got) === want)
+  }
+
   test("row-local kernels ≡ declarative forms: term counts + quality stats") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // termCountsLocal == explode + groupBy(id, word).count
