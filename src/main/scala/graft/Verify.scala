@@ -24,6 +24,13 @@ object Verify {
       require(unknown.isEmpty,
         s"unknown query names in SPARK_GRAFT_ONLY: ${unknown.mkString(", ")}")
     }
+    // a subset run names its queries in subset.txt, so the compare
+    // scores those alone; a full run removes a stale list
+    val subsetFile = Paths.get(s"$outDir/subset.txt")
+    only match {
+      case Some(names) => Files.writeString(subsetFile, names.toSeq.sorted.mkString("", "\n", "\n"))
+      case None => Files.deleteIfExists(subsetFile)
+    }
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -420,29 +420,68 @@ object TextOps {
   /** Exact thresholded Jaccard over a DF-CAPPED candidate index — the
     * array-kernel formulation of the web-scale Σdf² guard: shingles with
     * document frequency > `maxDf` are dropped from CANDIDATE GENERATION
-    * (bounding the index join at Σ_{df≤cap} df² ≤ cap·|rows|), while the
-    * surviving pairs are verified by exact sorted-merge intersection over
-    * the FULL shingle arrays. Output ≡ restricting
+    * (bounding the index at Σ_{df≤cap} df² ≤ cap·|rows| candidates),
+    * while the surviving pairs are verified by exact sorted-merge
+    * intersection over the FULL shingle arrays. Output ≡ restricting
     * `jaccardPairs(shinglesHashedLocal(df))` to pairs sharing ≥1 rare
     * shingle, then filtering jaccard ≥ minJaccard — the relation the
     * dedup_ngram_capped oracle computes — without ever rebuilding the
-    * full inverted index for verification. */
+    * full inverted index for verification.
+    *
+    * Two branches, one output. When the pinned arrays fit the broadcast
+    * bound ([[fitsBroadcast]]: ≤ `maxBroadcastDocs` docs and ≤ 1 GB of
+    * elements), the df histogram is counted on the driver over the
+    * collected arrays (df counts array ELEMENTS, exactly as
+    * explode(sh_arr) would) and [[indexedPairs]] generates and verifies
+    * the candidates in one map. Above it, the rare-shingle rows are
+    * pinned and self-joined, and the distinct candidates are verified by
+    * [[scoredPairs]]' join path. */
   def jaccardPairsCapped(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, maxDf: Long = 10L, minJaccard: Double = 0.8,
                          maxBroadcastDocs: Long = 100000L): DataFrame = {
     val arrs = pinShingleArrays(shingleArraysLocal(df, idCol, textCol, n))
-    val sh = arrs.df.select(col(idCol), explode(col("sh_arr")).as("shingle"))
-    val rareShingles = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select("shingle")
-    // checkpointed: the candidate self-join references rare twice — the
-    // shingle explode + df histogram + join would otherwise run twice
-    val rare = sh.join(rareShingles, "shingle").localCheckpoint()
-    val cand = rare.select(col(idCol).as("id1"), col("shingle"))
-      .join(rare.select(col(idCol).as("id2"), col("shingle")), "shingle")
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    scoredPairs(cand, arrs, idCol, minJaccard, maxBroadcastDocs,
-      spreadVerify = true)
+    if (fitsBroadcast(arrs, maxBroadcastDocs)) {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val rows = arrs.df.select(col(idCol), col("sh_arr")).as[(Long, Array[Long])].collect()
+      indexedPairs(spark, rows.map(_._1), rareKeys(rows.map(_._2), maxDf),
+        rows.map(_._2), minJaccard)
+    } else {
+      val sh = arrs.df.select(col(idCol), explode(col("sh_arr")).as("shingle"))
+      val rareShingles = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= maxDf).select("shingle")
+      // checkpointed: the candidate self-join references rare twice — the
+      // shingle explode + df histogram + join would otherwise run twice
+      val rare = sh.join(rareShingles, "shingle").localCheckpoint()
+      val cand = rare.select(col(idCol).as("id1"), col("shingle"))
+        .join(rare.select(col(idCol).as("id2"), col("shingle")), "shingle")
+        .filter(col("id1") < col("id2"))
+        .select("id1", "id2").distinct()
+      scoredPairs(cand, arrs, idCol, minJaccard, maxBroadcastDocs)
+    }
+  }
+
+  /** Per array, the dense ids of its elements whose document frequency
+    * is ≤ `maxDf` — df counting array ELEMENTS over all arrays, as
+    * explode(sh_arr) + count would. One sort of every element: the runs
+    * of the sorted copy are the distinct values and their df, and a
+    * value's id is its index among them. */
+  private def rareKeys(arrays: Array[Array[Long]], maxDf: Long): Array[Array[Int]] = {
+    val all = new Array[Long](arrays.iterator.map(_.length).sum)
+    var o = 0
+    arrays.foreach { a => System.arraycopy(a, 0, all, o, a.length); o += a.length }
+    java.util.Arrays.sort(all)
+    val values = scala.collection.mutable.ArrayBuilder.make[Long]
+    val rare = scala.collection.mutable.ArrayBuilder.make[Boolean]
+    var i = 0
+    while (i < all.length) {
+      var j = i
+      while (j < all.length && all(j) == all(i)) j += 1
+      values += all(i); rare += (j - i) <= maxDf
+      i = j
+    }
+    val (vals, isRare) = (values.result(), rare.result())
+    arrays.map(_.map(java.util.Arrays.binarySearch(vals, _)).filter(k => isRare(k)).distinct)
   }
 
   /** Shared tail of the candidate-based jaccard family: exact
@@ -452,10 +491,14 @@ object TextOps {
     * caller. */
   def scoredPairs(cand: DataFrame, arrs: ShingleArrays, idCol: String,
                   minJaccard: Double, maxBroadcastDocs: Long = 100000L,
-                  spreadVerify: Boolean = false,
-                  candRows: Option[Long] = None): DataFrame =
-    verifyCandidates(cand, arrs, idCol, maxBroadcastDocs,
-      spreadVerify = spreadVerify, candRows = candRows)
+                  spreadVerify: Boolean = false): DataFrame =
+    thresholded(verifyCandidates(cand, arrs, idCol, maxBroadcastDocs,
+      spreadVerify = spreadVerify), minJaccard)
+
+  /** (id1, id2, inter, sz1, sz2) → + jaccard, rounded to 6 places, and
+    * the threshold on the rounded value. */
+  private def thresholded(verified: DataFrame, minJaccard: Double): DataFrame =
+    verified
       .withColumn("jaccard",
         round(col("inter") / (col("sz1") + col("sz2") - col("inter")), 6))
       .filter(col("jaccard") >= minJaccard)
@@ -477,18 +520,50 @@ object TextOps {
       .as[(Long, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, text) =>
-          val sh = shingleSet(text, n)
-          if (sh.isEmpty) None
-          else {
-            val arr = new Array[Long](sh.size)
-            var i = 0
-            sh.foreach { s => arr(i) = md5Long60(s); i += 1 }
-            java.util.Arrays.sort(arr)
-            Some((id, arr))
-          }
+          val arr = shingleHashes(text, n)
+          if (arr.isEmpty) None
+          else { java.util.Arrays.sort(arr); Some((id, arr)) }
         }
       }
       .toDF(idCol, "sh_arr")
+  }
+
+  /** [[shingleArraysLocal]] plus each document's MinHash signature,
+    * (id, sig: array<bigint> of k, sh_arr), from ONE shingle set per
+    * document: the signature is [[minhashFold]] over the same md5 hashes
+    * the sorted array holds. Same rows as shingleArraysLocal (null id or
+    * text, or < n words → no row), and `sig` ≡ [[minhashSignaturesLocal]]. */
+  def signedShingleArraysLocal(df: DataFrame, idCol: String, textCol: String,
+                               n: Int = 3, k: Int = 16): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val fam = minhashFamily(k).toArray
+    df.select(col(idCol).cast("long"), col(textCol).cast("string"))
+      .where(col(idCol).isNotNull && col(textCol).isNotNull)
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        it.flatMap { case (id, text) =>
+          val arr = shingleHashes(text, n)
+          if (arr.isEmpty) None
+          else {
+            val sig = minhashFold(arr, fam)
+            java.util.Arrays.sort(arr)
+            Some((id, sig, arr))
+          }
+        }
+      }
+      .toDF(idCol, "sig", "sh_arr")
+  }
+
+  /** The md5-derived 60-bit hashes of one document's distinct
+    * n-shingles, unsorted (a 60-bit collision repeats a value); empty
+    * when the document is shorter than n words. */
+  private[graft] def shingleHashes(text: String, n: Int): Array[Long] = {
+    val sh = shingleSet(text, n)
+    val out = new Array[Long](sh.size)
+    var i = 0
+    sh.foreach { s => out(i) = md5Long60(s); i += 1 }
+    out
   }
 
   /** A pinned (id, sh_arr, …) relation with the two totals
@@ -506,6 +581,10 @@ object TextOps {
     ShingleArrays(df, obs.get("docs").asInstanceOf[Long],
       obs.get("elems").asInstanceOf[Long])
   }
+
+  /** Sorted-merge steps per task when a verify map is spread by its
+    * work. */
+  private val stepsPerTask = 3000000L
 
   /** Exact sorted-merge intersection with run-product counting — the
     * precise count the inverted-index join's groupBy would produce,
@@ -525,17 +604,196 @@ object TextOps {
     inter
   }
 
+  /** [[interCount]] when the pair can reach Jaccard ≥ t − 1e-6, else −1
+    * — without finishing the merge for most pairs that cannot. A pair
+    * is dropped up front when its size ratio already bounds Jaccard
+    * below t − 1e-6 (J ≤ min/max), and the merge stops as soon as the
+    * overlap counted so far plus the shorter remainder falls short of the
+    * overlap that Jaccard needs (J ≥ t' ⇔ inter ≥ t'·(|a|+|b|)/(1+t')).
+    * Callers keep pairs by round(J, 6) ≥ t, which no pair below
+    * t − 5e-7 passes, so a dropped pair is one the threshold drops. Valid
+    * only for t > 0 and arrays without repeated elements: run-product
+    * counting lets one step add more than the shorter remainder. */
+  private[graft] def boundedInterCount(a: Array[Long], b: Array[Long], t: Double): Long = {
+    val tp = t - 1e-6
+    val (la, lb) = (a.length, b.length)
+    if (math.min(la, lb) < tp * math.max(la, lb)) return -1L
+    // relative slack: a double error may only LOWER the overlap needed
+    val need = math.ceil(tp * (la + lb) / (1 + tp) * (1 - 1e-9)).toLong
+    var i = 0; var j = 0; var inter = 0L
+    while (i < la && j < lb && inter + math.min(la - i, lb - j) >= need) {
+      val ai = a(i); val bj = b(j)
+      if (ai == bj) { inter += 1; i += 1; j += 1 }
+      else if (ai < bj) i += 1
+      else j += 1
+    }
+    if (inter >= need) inter else -1L
+  }
+
+  /** True when the pinned arrays may be collected to the driver and
+    * broadcast: ≤ `maxBroadcastDocs` rows AND ≤ `maxBroadcastBytes` of
+    * elements (8 B each). */
+  private[graft] def fitsBroadcast(arrs: ShingleArrays, maxBroadcastDocs: Long,
+                                   maxBroadcastBytes: Long = 1L << 30): Boolean =
+    arrs.docs <= maxBroadcastDocs && arrs.elems * 8L <= maxBroadcastBytes
+
+  /** Dense ids 0, 1, … for per-row key lists — equal keys (by value)
+    * get equal ids: the key space [[indexedPairs]] indexes. */
+  private[graft] def denseKeys[K](rowKeys: Array[Seq[K]]): Array[Array[Int]] = {
+    val ids = new java.util.HashMap[K, Integer]()
+    rowKeys.map(_.map(k => ids.computeIfAbsent(k, _ => Int.box(ids.size)).intValue).toArray)
+  }
+
+  /** The broadcast side of [[indexedPairs]]. Documents are the distinct
+    * ids, ascending; document d owns the rows rows(rowOff(d) until
+    * rowOff(d + 1)); its keys (the union of its rows' keys) are
+    * keys(keyOff(d) until keyOff(d + 1)); key k's postings — the
+    * documents holding it, ascending — are post(postOff(k) until
+    * postOff(k + 1)). Slice s is the documents bounds(s) until
+    * bounds(s + 1). */
+  private[graft] final class PairIndex(
+      docIds: Array[Long], rowOff: Array[Int], rows: Array[Int],
+      keyOff: Array[Int], keys: Array[Int], postOff: Array[Int], post: Array[Int],
+      arrs: Array[Array[Long]], distinctRow: Array[Boolean], bounds: Array[Int])
+      extends Serializable {
+
+    /** (id1, id2, inter, sz1, sz2) for every pair of rows whose documents
+      * d < d2 share a key, d in slice `s` — minus the pairs
+      * [[boundedInterCount]] proves below t. */
+    def pairs(s: Int, t: Double): Iterator[(Long, Long, Long, Long, Long)] = {
+      val mark = Array.fill(docIds.length)(-1)
+      val cand = new Array[Int](docIds.length)
+      (bounds(s) until bounds(s + 1)).iterator.flatMap { d =>
+        // candidates: the union of d's postings past d, each once
+        var nc = 0
+        var q = keyOff(d)
+        while (q < keyOff(d + 1)) {
+          val k = keys(q)
+          var e = upperBound(postOff(k), postOff(k + 1), d)
+          while (e < postOff(k + 1)) {
+            val d2 = post(e)
+            if (mark(d2) != d) { mark(d2) = d; cand(nc) = d2; nc += 1 }
+            e += 1
+          }
+          q += 1
+        }
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
+        var c = 0
+        while (c < nc) {
+          val d2 = cand(c)
+          for (ra <- rowOff(d) until rowOff(d + 1); rb <- rowOff(d2) until rowOff(d2 + 1)) {
+            val (a, b) = (arrs(rows(ra)), arrs(rows(rb)))
+            val bounded = t > 0 && distinctRow(rows(ra)) && distinctRow(rows(rb))
+            val inter = if (bounded) boundedInterCount(a, b, t) else interCount(a, b)
+            if (inter >= 0)
+              out += ((docIds(d), docIds(d2), inter, a.length.toLong, b.length.toLong))
+          }
+          c += 1
+        }
+        out
+      }
+    }
+
+    /** First index in post[from, to) holding a document > d. */
+    private def upperBound(from: Int, to: Int, d: Int): Int = {
+      var (lo, hi) = (from, to)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (post(mid) <= d) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+  }
+
+  /** Exact thresholded Jaccard pairs of the rows (ids(i), keys(i),
+    * arrs(i)) that share a key — candidate index, candidates and exact
+    * verify in ONE broadcast map. The driver builds a key → documents
+    * postings index over the collected rows (O(elements)) and broadcasts
+    * it with the sorted arrays; each task takes a work-sized slice of
+    * id1s, unions the postings of id1's keys, keeps ids > id1 once each,
+    * and scores every row pair of the two ids with [[interCount]]
+    * ([[boundedInterCount]] when t > 0 and neither array repeats an
+    * element). No candidate relation is ever joined, deduplicated,
+    * pinned or repartitioned. Rows sharing an id pair with every row of
+    * the other id, as the join path's two inner joins do. Output ≡
+    * [[scoredPairs]] over the distinct key-sharing pairs (id1 < id2),
+    * same schema and rounding; `arrs` must be sorted, and must fit the
+    * [[fitsBroadcast]] bound. */
+  private[graft] def indexedPairs(spark: org.apache.spark.sql.SparkSession,
+                                  ids: Array[Long], keys: Array[Array[Int]],
+                                  arrs: Array[Array[Long]], minJaccard: Double): DataFrame = {
+    import spark.implicits._
+    val rows = ids.indices.sortBy(ids(_)).toArray
+    val docIdsB = scala.collection.mutable.ArrayBuilder.make[Long]
+    val rowOffB = scala.collection.mutable.ArrayBuilder.make[Int]
+    for (r <- rows.indices if r == 0 || ids(rows(r)) != ids(rows(r - 1))) {
+      docIdsB += ids(rows(r)); rowOffB += r
+    }
+    rowOffB += rows.length
+    val (docIds, rowOff) = (docIdsB.result(), rowOffB.result())
+    val nDocs = docIds.length
+    val nKeys = keys.iterator.flatMap(_.iterator).foldLeft(-1)(math.max) + 1
+    // a document's keys: the union of its rows' keys, each once
+    val seen = Array.fill(nKeys)(-1)
+    val keyOff = new Array[Int](nDocs + 1)
+    val docKeysB = scala.collection.mutable.ArrayBuilder.make[Int]
+    var n = 0
+    for (d <- 0 until nDocs) {
+      for (r <- rowOff(d) until rowOff(d + 1); k <- keys(rows(r)) if seen(k) != d) {
+        seen(k) = d; docKeysB += k; n += 1
+      }
+      keyOff(d + 1) = n
+    }
+    val docKeys = docKeysB.result()
+    // postings: count per key, prefix-sum, fill in document order — so
+    // every posting list is ascending
+    val postOff = new Array[Int](nKeys + 1)
+    docKeys.foreach(k => postOff(k + 1) += 1)
+    for (k <- 0 until nKeys) postOff(k + 1) += postOff(k)
+    val fill = postOff.clone()
+    val post = new Array[Int](docKeys.length)
+    for (d <- 0 until nDocs; q <- keyOff(d) until keyOff(d + 1)) {
+      post(fill(docKeys(q))) = d; fill(docKeys(q)) += 1
+    }
+    // work-sized slices: a document's work is its postings (a bound on
+    // its candidates) × its rows × the mean array length (merge steps
+    // per pair); stepsPerTask each, at most defaultParallelism tasks
+    val avgLen = math.max(1L, arrs.iterator.map(_.length.toLong).sum / math.max(1, arrs.length))
+    val work = Array.tabulate(nDocs) { d =>
+      (keyOff(d) until keyOff(d + 1)).iterator
+        .map(q => (postOff(docKeys(q) + 1) - postOff(docKeys(q))).toLong).sum *
+        (rowOff(d + 1) - rowOff(d)) * avgLen
+    }
+    val total = work.sum
+    val p = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
+      total / stepsPerTask)).toInt
+    val bounds = new Array[Int](p + 1)
+    var (acc, s) = (0L, 1)
+    for (d <- 0 until nDocs) {
+      acc += work(d)
+      while (s < p && acc * p >= total * s) { bounds(s) = d + 1; s += 1 }
+    }
+    while (s <= p) { bounds(s) = nDocs; s += 1 }
+    val distinctRow = arrs.map(a => (1 until a.length).forall(i => a(i) != a(i - 1)))
+    val bc = spark.sparkContext.broadcast(new PairIndex(docIds, rowOff, rows,
+      keyOff, docKeys, postOff, post, arrs, distinctRow, bounds))
+    thresholded(spark.range(0, p, 1, p).as[Long]
+      .mapPartitions { it =>
+        val ix = bc.value
+        it.flatMap(s => ix.pairs(s.toInt, minJaccard))
+      }
+      .toDF("id1", "id2", "inter", "sz1", "sz2"), minJaccard)
+  }
+
   /** Exact (inter, sz1, sz2) for each candidate pair against the
     * (id, sh_arr) sorted-array relation. ≤ `maxBroadcastDocs`: the arrays
     * are broadcast and verification is a narrow map over the pairs;
     * above: two shuffle joins ship each pair its arrays. Both paths run
-    * `interCount`. `candRows`, when given, says `cand` is already pinned
-    * and holds that many pairs. */
+    * `interCount`. */
   private[graft] def verifyCandidates(cand: DataFrame, arrs: ShingleArrays, idCol: String,
                                       maxBroadcastDocs: Long,
                                       maxBroadcastBytes: Long = 1L << 30,
-                                      spreadVerify: Boolean = false,
-                                      candRows: Option[Long] = None): DataFrame = {
+                                      spreadVerify: Boolean = false): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
     // the decision is (rows, BYTES), not rows alone: a row cap bounds
@@ -545,7 +803,7 @@ object TextOps {
     // Both totals were observed when the arrays were pinned; the collect
     // runs only when BOTH fit.
     val rel = arrs.df.select(col(idCol), col("sh_arr"))
-    val fits = arrs.docs <= maxBroadcastDocs && arrs.elems * 8L <= maxBroadcastBytes
+    val fits = fitsBroadcast(arrs, maxBroadcastDocs, maxBroadcastBytes)
     val collected =
       if (!fits) Array.empty[(Long, Array[Long])]
       else rel.as[(Long, Array[Long])].collect()
@@ -560,8 +818,7 @@ object TextOps {
       // defaultParallelism(32) — lost to 32 × ~55 ms task overhead; the
       // cost model picks the partition count from the WORK instead:
       // the pair relation is pinned (one cheap barrier; pair count
-      // rides the checkpoint via observe, free — or the caller's own
-      // pin already counted it) and spread over
+      // rides the checkpoint via observe, free) and spread over
       // work / stepsPerTask (3M merge-steps per task), capped at
       // defaultParallelism. Small candidate sets compute p = 1 and pay
       // only the pin; opt-in (spreadVerify) so row-trivial callers
@@ -569,13 +826,9 @@ object TextOps {
       val candSrc =
         if (!spreadVerify) cand
         else {
-          val (pinned, nPairs) = candRows match {
-            case Some(n) => (cand, n)
-            case None => Components.pinCounted(cand)
-          }
+          val (pinned, nPairs) = Components.pinCounted(cand)
           val avgLen = if (arrs.docs > 0L) arrs.elems / arrs.docs else 0L
           val work = nPairs * 2L * math.max(avgLen, 1L)
-          val stepsPerTask = 3000000L
           val p = math.max(1L, math.min(
             spark.sparkContext.defaultParallelism.toLong,
             work / stepsPerTask)).toInt
@@ -711,22 +964,27 @@ object TextOps {
     // too-short text. shingleSet would NPE, and one null row must not
     // kill a whole streaming query or signature job.
     if (text == null) return None
-    val sh = shingleSet(text, n)
-    if (sh.isEmpty) None
-    else {
-      val mins = Array.fill(fam.length)(Long.MaxValue)
-      sh.foreach { s =>
-        val base = md5Long60(s) & ((1L << 30) - 1)
-        var j = 0
-        while (j < fam.length) {
-          val (a, b) = fam(j)
-          val h = (a * base + b) % minhashPrime
-          if (h < mins(j)) mins(j) = h
-          j += 1
-        }
+    val hashes = shingleHashes(text, n)
+    if (hashes.isEmpty) None else Some(minhashFold(hashes, fam))
+  }
+
+  /** fam.length affine min-hashes over the masked 60-bit shingle
+    * hashes — the fold [[minhashVector]] and
+    * [[signedShingleArraysLocal]] share. */
+  private[graft] def minhashFold(hashes: Array[Long],
+                                 fam: Array[(Long, Long)]): Array[Long] = {
+    val mins = Array.fill(fam.length)(Long.MaxValue)
+    hashes.foreach { h0 =>
+      val base = h0 & ((1L << 30) - 1)
+      var j = 0
+      while (j < fam.length) {
+        val (a, b) = fam(j)
+        val h = (a * base + b) % minhashPrime
+        if (h < mins(j)) mins(j) = h
+        j += 1
       }
-      Some(mins)
     }
+    mins
   }
 
   /** All-pairs Levenshtein over a SMALL string dimension as a

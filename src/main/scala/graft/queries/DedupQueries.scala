@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: none of these queries ever materializes the n² pair
   * space. Jaccard pairs come from the shingle inverted-index join;
-  * MinHash/SimHash candidates come from band-key equi-joins; only the
+  * MinHash/SimHash candidates come from band-key equi-joins (the capped
+  * n-gram and MinHash pairs, below the broadcast bound, from one
+  * driver-built postings index probed in a single map,
+  * TextOps.indexedPairs); only the
   * embedding near-dup baseline is quadratic (kept as the correctness
   * baseline — the ANN queries in SimilarityQueries are the scale path). */
 object DedupQueries extends QueryRegistry {
@@ -157,40 +160,15 @@ object DedupQueries extends QueryRegistry {
     s"($a * (shingle & 1073741823) + $b) % ${TextOps.minhashPrime}"
   }
 
-  /** Shared banded-LSH → exact-verify pipeline: the verified near-dup
-    * pair relation (id1 < id2, jaccard ≥ 0.8) both dedup_minhash_lsh and
-    * dedup_source_matrix consume. Signatures are computed ROW-LOCALLY
-    * (one narrow map — no corpus shingle explode, no per-doc window
-    * sort); checkpointed because the 4-way band union self-joins the
-    * relation 8×. Only CANDIDATE docs are ever shingled for the exact
-    * verify (at scale: |candidates| ≪ corpus — for DISTINCT documents;
-    * see below).
-    *
-    * Duplicate GROUPS (r9 review): k exact/near copies of one template
-    * agree on every band, so the band join emits C(k,2) candidates —
-    * but that is the OUTPUT, not waste: an exact pair LISTING at
-    * jaccard ≥ 0.8 genuinely contains those C(k,2) rows, so no
-    * algorithm that returns this relation avoids them (unlike the
-    * embedding family's cellCap, which bounds a top-k SEARCH where
-    * dropping candidates only trades recall). The declared 100 TB
-    * posture is therefore COMPOSITION: run exact dedup first
-    * (dedup_exact_keepers — one groupBy, collapses every k-copy
-    * template group to 1 row — exactly what pipeline_curate and
-    * pipeline_train_mix do upstream), after which surviving bucket
-    * groups are genuine near-dup sets whose pair lists are the answer;
-    * downstream consumers that only need CLUSTERS should consume
-    * dedup_clusters' components, never the raw pair list. */
   /** LSH band-bucket candidate pairs (id1 < id2), UNVERIFIED — the raw
     * recall surface of the 4×4 banding scheme, before exact-Jaccard
-    * verification. Shared by [[minhashVerifiedPairs]] (which verifies
-    * them) and dedup_minhash_recall (which measures them against exact
-    * ground truth). Signatures are row-local (one narrow map, no corpus
-    * shingle explode) and checkpointed because both sides of the band
-    * self-join read them. */
+    * verification: docs agreeing on any (band, band_key). `sig` is a
+    * pinned (doc_id, h0..h15) signature relation — both sides of the
+    * band self-join read it. Shared by [[minhashVerifiedPairs]]' join
+    * branch and dedup_minhash_recall (which measures them against exact
+    * ground truth). */
   private def bandCandidates(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sig = TextOps.minhashSignaturesLocal(docs, "doc_id", "text", 3, minhashK)
-      .localCheckpoint()
+      sig: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val bands = TextOps.lshBands(sig, "doc_id", minhashK, minhashBands)
     bands.as("a")
       .join(bands.as("b"),
@@ -200,21 +178,57 @@ object DedupQueries extends QueryRegistry {
       .distinct()
   }
 
+  /** Shared banded-LSH → exact-verify pipeline: the verified near-dup
+    * pair relation (id1 < id2, jaccard ≥ 0.8) that dedup_minhash_lsh,
+    * dedup_source_matrix and dedup_clusters consume. One narrow pin
+    * computes each document's MinHash signature and its sorted shingle
+    * array from ONE shingle set (TextOps.signedShingleArraysLocal).
+    *
+    * Two branches, one output. When the pin fits the broadcast bound
+    * (TextOps.fitsBroadcast: ≤ `maxBroadcastDocs` docs and ≤ 1 GB of
+    * elements), the exact (band, band_key) values are the keys of
+    * TextOps.indexedPairs: candidates and exact verify in one map, no
+    * band join. Above it, the band self-join over the pinned signatures
+    * yields the distinct candidates, verified by the join path of
+    * TextOps.scoredPairs against the pinned arrays.
+    *
+    * Duplicate GROUPS (r9 review): k exact/near copies of one template
+    * agree on every band, so banding emits C(k,2) candidates — but that
+    * is the OUTPUT, not waste: an exact pair LISTING at jaccard ≥ 0.8
+    * genuinely contains those C(k,2) rows, so no algorithm that returns
+    * this relation avoids them (unlike the embedding family's cellCap,
+    * which bounds a top-k SEARCH where dropping candidates only trades
+    * recall). The declared 100 TB posture is therefore COMPOSITION: run
+    * exact dedup first (dedup_exact_keepers — one groupBy, collapses
+    * every k-copy template group to 1 row — exactly what pipeline_curate
+    * and pipeline_train_mix do upstream), after which surviving bucket
+    * groups are genuine near-dup sets whose pair lists are the answer;
+    * downstream consumers that only need CLUSTERS should consume
+    * dedup_clusters' components, never the raw pair list. */
   private[graft] def minhashVerifiedPairs(
       spark: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val docs = Tables.documents(spark, d)
-    // candDocs (→ arrs) and scoredPairs both consume the candidates:
-    // pin them, or the band join + distinct run twice; the pair count
-    // the verify spread needs rides the same pin
-    val (cand, nCand) = Components.pinCounted(bandCandidates(docs))
-    val candDocs = cand.select(col("id1").as("doc_id"))
-      .union(cand.select(col("id2"))).distinct()
-    val arrs = TextOps.pinShingleArrays(TextOps.shingleArraysLocal(
-      docs.join(candDocs, "doc_id").select(col("doc_id"), col("text")),
-      "doc_id", "text", 3))
-    TextOps.scoredPairs(cand, arrs, "doc_id", 0.8, spreadVerify = true,
-      candRows = Some(nCand))
+      d: String,
+      maxBroadcastDocs: Long = 100000L): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val arrs = TextOps.pinShingleArrays(TextOps.signedShingleArraysLocal(
+      Tables.documents(spark, d), "doc_id", "text", 3, minhashK))
+    if (TextOps.fitsBroadcast(arrs, maxBroadcastDocs)) {
+      val rows = arrs.df.select(col("doc_id"), col("sig"), col("sh_arr"))
+        .as[(Long, Array[Long], Array[Long])].collect()
+      val rpb = minhashK / minhashBands
+      // (band, its rpb hashes) ≡ (band, band_key): concat_ws of the
+      // decimal hashes is injective
+      val keys = TextOps.denseKeys(rows.map { case (_, sig, _) =>
+        val bandKeys: Seq[(Int, Seq[Long])] =
+          (0 until minhashBands).map(b => (b, sig.slice(b * rpb, (b + 1) * rpb).toSeq))
+        bandKeys
+      })
+      TextOps.indexedPairs(spark, rows.map(_._1), keys, rows.map(_._3), 0.8)
+    } else {
+      val sig = arrs.df.select(
+        col("doc_id") +: (0 until minhashK).map(j => col("sig")(j).as(s"h$j")): _*)
+      TextOps.scoredPairs(bandCandidates(sig), arrs, "doc_id", 0.8, maxBroadcastDocs)
+    }
   }
 
   /** DuckDB dual of minhashVerifiedPairs, up to a `pairs(id1, id2,
@@ -623,7 +637,8 @@ object DedupQueries extends QueryRegistry {
         array_join(slice(ws, lit(1), ceil(size(ws) * keepFrac).cast("int")), " ")
           .as("text"))
       val corpus = base.unionByName(pref).localCheckpoint()
-      val cand = bandCandidates(corpus)
+      val cand = bandCandidates(
+        TextOps.minhashSignaturesLocal(corpus, "doc_id", "text", 3, minhashK).localCheckpoint())
       val planted = base.select(col("doc_id").as("id1"),
         (col("doc_id") + 10000000L).as("id2"))
       val arrs = TextOps.pinShingleArrays(

@@ -4,6 +4,10 @@ engine itself is Scala/Spark; this uses the driver-side python stack).
 
 Usage:  python3 tools/verify_local.py [sfDir] [outDir] [--ledger FILE]
 
+When `graft.Verify` ran a subset (SPARK_GRAFT_ONLY or its third
+argument) it lists the names in outDir/subset.txt, and only those are
+scored; a subset query without output still FAILs.
+
 Runs DuckDB on each oracle_sql.json entry with the fixture parquet files
 registered under their bare table names, reads the Spark output parquet
 written by `graft.Verify`, sorts columns by name, and compares values
@@ -312,6 +316,14 @@ def main():
     out = args[1] if len(args) > 1 else "/tmp/graft_verify"
 
     oracle = json.load(open(f"{out}/oracle_sql.json"))
+    # a subset Verify run (SPARK_GRAFT_ONLY or its third argument) lists
+    # its queries in subset.txt: score those, not the whole registry
+    subset_path = f"{out}/subset.txt"
+    if one is None and os.path.exists(subset_path):
+        with open(subset_path) as f:
+            subset = {line.strip() for line in f if line.strip()}
+        print(f"subset run: scoring {len(subset)} of {len(oracle)} queries")
+        oracle = {k: v for k, v in oracle.items() if k in subset}
 
     if one is not None:
         con = fresh_con(sf)
